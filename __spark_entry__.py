@@ -1,9 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Registry entry points of the PySpark engine.
 
 ``entry(spark)`` — flagship query smoke on sf0.001.
 ``queries()`` — every implemented operator from SURVEY.md §2 (plus the
 beyond-reference pipeline operators), as (spark, sf_dir) -> DataFrame.
-``oracle_sql()`` — DuckDB twins for the driver's differential check.
+``oracle_sql()`` — DuckDB twins for the differential check.
 
 Implementation lives in ``zarr_datafusion_spark``; this module only
 aggregates the per-module registries.
@@ -26,100 +26,13 @@ def entry(spark: SparkSession) -> DataFrame:
     TPC-H-Q1-style pricing summary: scan -> filter -> groupBy ->
     multi-agg -> sort (SURVEY §7 phase 1 minimum slice).
     """
-    from pyspark.sql import functions as F
-
     from zarr_datafusion_spark.operators.relational import agg_groupby
 
     df = agg_groupby(spark, "/root/testdata/sf0.001")
     return df.orderBy("l_returnflag", "l_linestatus")
 
 
-#: Driver correctness window: the driver records exactly the first 50
-#: registry slots each round (every CORRECTNESS_r*.json holds 50 rows).
-WINDOW = 50
-
-#: Entries whose implementation or oracle text changed THIS round: the
-#: standing green record predates the code, so each takes a window slot
-#: for a fresh record.  Since r7 detection is MECHANICAL (VERDICT r6
-#: item 4): ``_registries`` unions this dict with
-#: :func:`zarr_datafusion_spark.fingerprints.changed_since_record`,
-#: which compares each green entry's current call-graph+oracle
-#: fingerprint against the REGISTRY_FINGERPRINTS.json snapshot at its
-#: green round's driver commit — a forgotten declaration can no longer
-#: leave a stale record counting as correct.  This dict now only
-#: carries human-readable reasons (and covers rounds predating the
-#: snapshot).  Reset the contents every round.
-RE_RECORD: dict[str, str] = {
-    # r15: reset at round start.  The five entries whose r14 code
-    # changes never earned a post-change driver record
-    # (search_bm25_topk, search_phrase, dedup_substring_winnowed,
-    # dedup_cut_spans, dedup_setsim_prefix_join — VERDICT r14 item 1)
-    # are mechanically fingerprint-flagged and verified present in the
-    # window at round start (positions 24-28 of 50); with the
-    # changed-before-urgent priority below they now lead the stale
-    # block outright.  No hand declarations needed.
-}
-
-
-def _latest_green_round() -> dict[str, int]:
-    """entry name -> latest round with a fully green driver record
-    (rows + schema + hash), parsed from the CORRECTNESS_r*.json files
-    the driver writes next to this module.  Entries absent from every
-    file have no record and MUST be placed inside the checked window."""
-    import glob
-    import json
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                recs = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, rec in recs.items():
-            if (
-                isinstance(rec, dict)
-                and rec.get("rows_match")
-                and rec.get("schema_match")
-                and rec.get("hash_match")
-            ):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def _registries() -> tuple[dict, dict]:
-    """Aggregate per-module registries, ORACLE-BACKED ENTRIES FIRST.
-
-    The round-1 driver checked only the first ~50 registry entries, so
-    every textstats/dedup/similarity/temporal/streaming entry fell
-    outside the correctness record (VERDICT r1 item 1).  Ordering is
-    therefore part of the driver contract: all hash-checkable entries
-    come first and the rows-only entries (engine-specific state without
-    SQL twins) close the list.
-
-    Within the oracle-backed block the checked window is COMPUTED, not
-    curated (VERDICT r5 item 4 replaced the 113-line demote list):
-
-    1. entries with no green driver record in any CORRECTNESS_r*.json
-       (new operators, new oracles) come first — they need their first
-       record;
-    2. entries in :data:`RE_RECORD` (code/oracle changed this round)
-       follow — their record is stale;
-    3. the remaining recorded entries fill the window stalest-record
-       first, so old records refresh opportunistically;
-    4. rows-only entries close the list.
-
-    Forgetting an entry is now impossible: a new oracle-backed entry
-    lands in the window automatically, and the only manual act is
-    declaring a code change in RE_RECORD (pinned by
-    ``tests/test_registry_window.py``).
-    """
+def _modules() -> tuple:
     from zarr_datafusion_spark.operators import (
         dedup,
         extras,
@@ -132,10 +45,7 @@ def _registries() -> tuple[dict, dict]:
         zarr_queries,
     )
 
-    # ``extras`` is deliberately LAST: new round-2+ oracle entries
-    # append after the curated ~50-slot checked window instead of
-    # displacing rows whose green record the driver already holds.
-    mods = (
+    return (
         zarr_queries,
         temporal,
         dedup,
@@ -146,111 +56,34 @@ def _registries() -> tuple[dict, dict]:
         relational,
         extras,
     )
-    seen: set[str] = set()
-    for mod in mods:
-        dup = seen & mod.QUERIES.keys()
-        if dup:  # a later module must never silently shadow an earlier one
-            raise ValueError(f"duplicate query names in {mod.__name__}: {dup}")
-        seen |= mod.QUERIES.keys()
-
-    queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    oracles: dict[str, str] = {}
-    for with_oracle in (True, False):
-        for mod in mods:
-            for name, fn in mod.QUERIES.items():
-                if (name in mod.ORACLE) is with_oracle:
-                    queries[name] = fn
-        if with_oracle:
-            for mod in mods:
-                oracles.update(mod.ORACLE)
-
-    green = _latest_green_round()
-    oracle_names = [n for n in queries if n in oracles]
-    rows_only = [n for n in queries if n not in oracles]
-
-    unknown = set(RE_RECORD) - set(oracle_names)
-    if unknown:
-        raise ValueError(f"RE_RECORD names not in the registry: {unknown}")
-
-    # Mechanical staleness (VERDICT r6 item 4): fingerprint drift since
-    # the entry's green-record commit.  Degrades to the hand dict alone
-    # when git/snapshot history is unavailable (never blocks the driver).
-    from zarr_datafusion_spark import fingerprints as FP
-
-    try:
-        changed = FP.changed_since_record(
-            green, FP.compute_fingerprints(queries, oracles)
-        )
-    except Exception as e:  # degrade, never block the driver — but say so
-        print(
-            "WARNING: mechanical staleness check disabled "
-            f"({type(e).__name__}: {e}); falling back to RE_RECORD only",
-            file=sys.stderr,
-        )
-        changed = set()
-
-    firsts = [n for n in oracle_names if n not in green]
-    if len(firsts) > WINDOW:
-        raise ValueError(
-            f"{len(firsts)} first-record entries exceed the {WINDOW}-slot "
-            "window; stage new entries across rounds"
-        )
-    idx = {n: i for i, n in enumerate(oracle_names)}
-    # Freshness floor (VERDICT r11 item 1): any green entry whose record
-    # would become "ancient" once the driver writes THIS round's file
-    # (round < (latest+1) - ceil(n_green/WINDOW)) must re-record now —
-    # it outranks RE_RECORD/fingerprint-stale entries, whose records are
-    # by construction fresher.  Ranking stalest-first realizes exactly
-    # that priority, because urgent entries hold the smallest rounds.
-    import math
-
-    recorded = [n for n in oracle_names if n in green]
-    latest = max((green[n] for n in recorded), default=0)
-    cycle = math.ceil(len(recorded) / WINDOW) if recorded else 1
-    urgent = {n for n in recorded if green[n] < (latest + 1) - cycle}
-    # Changed code outranks the freshness floor (VERDICT r14 item 1):
-    # a stale-but-unchanged record is strictly safer than a stale
-    # record on changed code, so under window pressure the
-    # changed/declared entries take slots first; urgent-only entries
-    # follow stalest-first (and still trip the unsatisfiable-floor
-    # error below if truncated, which is loud by design).
-    stale = sorted(
-        (
-            n
-            for n in recorded
-            if n in RE_RECORD or n in changed or n in urgent
-        ),
-        key=lambda n: (
-            n not in RE_RECORD and n not in changed,  # changed first
-            green[n],
-            idx[n],
-        ),
-    )
-    # Window overflow auto-stages: firsts always fit (checked above);
-    # stale entries beyond the window keep their fingerprint mismatch,
-    # so they are re-derived and lead the rotation next round.
-    need = (firsts + stale)[:WINDOW]
-    dropped = urgent - set(need)
-    if dropped:
-        raise ValueError(
-            f"freshness floor unsatisfiable: {len(firsts)} first-record "
-            f"entries crowd out about-to-be-ancient entries {sorted(dropped)}"
-        )
-    standing = sorted(
-        (n for n in oracle_names if n not in set(need)),
-        key=lambda n: (green.get(n, 0), idx[n]),  # stalest record first
-    )
-    ordered = need + standing + rows_only
-    queries = {n: queries[n] for n in ordered}
-    return queries, oracles
-
-
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _registries()[0]
+    """Every registry entry: oracle-backed entries first, then the
+    rows-only ones, each group in module order.  A name registered by
+    two modules raises instead of one silently shadowing the other."""
+    mods = _modules()
+    seen: set[str] = set()
+    for mod in mods:
+        dup = seen & mod.QUERIES.keys()
+        if dup:
+            raise ValueError(f"duplicate query names in {mod.__name__}: {dup}")
+        seen |= mod.QUERIES.keys()
+    return {
+        name: fn
+        for with_oracle in (True, False)
+        for mod in mods
+        for name, fn in mod.QUERIES.items()
+        if (name in mod.ORACLE) is with_oracle
+    }
 
 
 def oracle_sql() -> dict[str, str]:
-    qs, oracles = _registries()
-    return {name: sql for name, sql in oracles.items() if name in qs}
+    """DuckDB twin SQL for every oracle-backed entry of :func:`queries`."""
+    qs = queries()
+    return {
+        name: sql
+        for mod in _modules()
+        for name, sql in mod.ORACLE.items()
+        if name in qs
+    }

@@ -320,22 +320,21 @@ def _warm_page_cache(*paths: str) -> None:
                 pass
 
 
-def _prev_round_artifact() -> dict | None:
-    """The per-query record of the PREVIOUS round: the checked-in
-    ``scripts/bench_local_latest.json`` as of the last ``round N:
-    verdict`` driver commit (the round boundary).  Reading from git —
-    not from the working tree — means mid-round bench runs that
-    refresh the artifact can't make the comparison self-referential.
-    Returns None (normalization skipped) when git or the file is
-    unavailable; never raises."""
-    from zarr_datafusion_spark.fingerprints import file_at_round_commit
-
-    text = file_at_round_commit("scripts/bench_local_latest.json")
-    if text is None:
-        return None
+def _baseline_artifact() -> dict | None:
+    """The per-query baseline record: the checked-in
+    ``scripts/bench_baseline.json``, a copy of a past run's
+    ``bench_local_latest.json``.  A separate file, so runs that refresh
+    ``bench_local_latest.json`` can't make the comparison
+    self-referential; refresh it by hand when the baseline should move.
+    Returns None (normalization skipped) when the file is missing or
+    unreadable; never raises."""
+    path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "scripts", "bench_baseline.json"
+    )
     try:
-        return json.loads(text)
-    except ValueError:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
         return None
 
 
@@ -348,7 +347,7 @@ def _normalized_regressions(
     bench now does the arithmetic itself.
 
     ``probe_factor`` = prev matmul GFLOPS / current matmul GFLOPS —
-    how much SLOWER this box is than the previous round's — clamped to
+    how much SLOWER this box is than the baseline run's — clamped to
     [1.0, 2.0]: the factor only EXCUSES slowdowns on a provably slower
     box, it never DEMANDS speedups on a faster one (first r13 run: the
     probe read 1.74x faster while pyloop was unchanged, and a
@@ -492,7 +491,7 @@ def main() -> None:
     total = round(sum(timings.values()), 4)
     probes = _machine_probes()
     nreg, probe_factor = _normalized_regressions(
-        timings, probes, _prev_round_artifact()
+        timings, probes, _baseline_artifact()
     )
     full = {
         "metric": "headline_queries_wall",
@@ -508,8 +507,8 @@ def main() -> None:
         "eager_construction": sorted(
             n for n in timings if n in EAGER_CONSTRUCTION
         ),
-        # probe-normalized drift flags vs the previous round's
-        # checked-in artifact (VERDICT r12 item 3; rule in BASELINE.md)
+        # probe-normalized drift flags vs the checked-in baseline
+        # scripts/bench_baseline.json (VERDICT r12 item 3; BASELINE.md)
         "probe_factor_vs_prev": probe_factor,
         "normalized_regressions": nreg,
     }

@@ -677,21 +677,37 @@ def test_prefix_join_equals_lsh_verified_pairs_above_threshold(spark):
 
 
 def test_prefix_join_brute_force_synthetic(spark):
-    """Adversarial synthetic corpus vs a Python brute-force twin:
-    short docs (< 3 tokens -> whole-text gram fallback), exact dups,
-    and borderline pairs straddling the threshold."""
+    """Adversarial synthetic corpora vs a Python brute-force twin.
+    Case 1: short docs (< 3 tokens -> whole-text gram fallback), exact
+    dups, and borderline pairs straddling the threshold.  Case 2: two
+    identical 1,200-token docs at t = 1 - 2^-20, whose integer
+    threshold predicate (p+q = 2^21 - 1) overflows INT arithmetic."""
     from zarr_datafusion_spark.operators.extras import setsim_prefix_join
 
-    texts = {
-        1: "a b c d e f g h",
-        2: "a b c d e f g h",          # exact dup of 1
-        3: "a b c d e f g x",          # high-overlap near-dup of 1
-        4: "z y x w v u t s",          # disjoint grams
-        5: "a b c q r s t u v w",      # low overlap with 1
-        6: "hi",                        # < 3 tokens -> fallback gram
-        7: "hi",                        # dup of 6 via fallback
-        8: "solo",                      # lone fallback gram
-    }
+    long_doc = " ".join(f"w{i}" for i in range(1200))
+    cases = [
+        (
+            {
+                1: "a b c d e f g h",
+                2: "a b c d e f g h",          # exact dup of 1
+                3: "a b c d e f g x",          # high-overlap near-dup of 1
+                4: "z y x w v u t s",          # disjoint grams
+                5: "a b c q r s t u v w",      # low overlap with 1
+                6: "hi",                        # < 3 tokens -> fallback gram
+                7: "hi",                        # dup of 6 via fallback
+                8: "solo",                      # lone fallback gram
+            },
+            0.5,
+        ),
+        (
+            {
+                1: long_doc,
+                2: long_doc,                                 # exact dup of 1
+                3: long_doc.rsplit(" ", 1)[0] + " x",        # J just below t
+            },
+            1 - 2**-20,
+        ),
+    ]
 
     def grams(t):
         w = t.lower().strip().split()
@@ -699,22 +715,25 @@ def test_prefix_join_brute_force_synthetic(spark):
             return {t.lower().strip()}
         return {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
 
-    t = 0.5
-    expect = set()
-    for a in texts:
-        for b in texts:
-            if a < b:
-                ga, gb = grams(texts[a]), grams(texts[b])
-                j = len(ga & gb) / len(ga | gb)
-                if j >= t:
-                    expect.add((a, b, j))
+    for texts, t in cases:
+        expect = set()
+        for a in texts:
+            for b in texts:
+                if a < b:
+                    ga, gb = grams(texts[a]), grams(texts[b])
+                    j = len(ga & gb) / len(ga | gb)
+                    if j >= t:
+                        expect.add((a, b, j))
 
-    docs = spark.createDataFrame(
-        [(k, v) for k, v in texts.items()], "doc_id long, text string"
-    )
-    got = {(r.doc_a, r.doc_b, r.jaccard) for r in setsim_prefix_join(docs, t).collect()}
-    assert expect, "synthetic corpus produced no expected pairs (vacuous)"
-    assert got == expect
+        docs = spark.createDataFrame(
+            [(k, v) for k, v in texts.items()], "doc_id long, text string"
+        )
+        got = {
+            (r.doc_a, r.doc_b, r.jaccard)
+            for r in setsim_prefix_join(docs, t).collect()
+        }
+        assert expect, f"t={t}: corpus produced no expected pairs (vacuous)"
+        assert got == expect, t
 
 
 def test_cdc_chunks_survive_prefix_insertion(spark):

@@ -1871,3 +1871,28 @@ def test_branch_creation_fence_raises_over_live_s3(spark, s3_repo, tmp_path):
     with mock.patch.object(ic, "_publish_ref", ours_then_rival):
         with _pytest.raises(IcechunkConflictError, match="raced"):
             ic.create_branch(url, "raced", s2)
+
+
+def test_append_fixture_key_follows_builder_source(monkeypatch):
+    """``zarr_icechunk_append`` keys its cached repo on the source of
+    the modules that build it: an edit to icechunk.py, or to the
+    writer it reaches through the sink, changes the key."""
+    import io
+
+    from zarr_datafusion_spark.operators import common
+
+    mod = "zarr_datafusion_spark.zarr.icechunk"
+    base = common.package_source_digest(mod)
+    assert common.package_source_digest(mod) == base
+    real_open = open
+    for edited in ("icechunk.py", "writer.py"):
+
+        def fake_open(path, mode="r", *a, edited=edited, **k):
+            with real_open(path, mode, *a, **k) as f:
+                data = f.read()
+            if os.path.basename(path) == edited:
+                data += b"\n# edit\n"
+            return io.BytesIO(data)
+
+        monkeypatch.setattr(common, "open", fake_open, raising=False)
+        assert common.package_source_digest(mod) != base, edited

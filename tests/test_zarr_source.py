@@ -274,6 +274,48 @@ def test_sink_roundtrip(spark, tmp_path):
     assert sorted(map(tuple, src.collect())) == sorted(map(tuple, back.collect()))
 
 
+_SINK_OUTSIDE_CHECKOUT = """
+import sys
+sys.path.insert(0, sys.argv[1])  # the driver only; workers get no path
+from pyspark.sql import SparkSession
+from zarr_datafusion_spark.zarr import read_zarr, write_zarr
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.driver.memory", "512m").getOrCreate())
+df = spark.createDataFrame(
+    [(t, x, float(t * 10 + x)) for t in range(3) for x in range(4)],
+    "time long, x long, v double")
+write_zarr(df, "store.zarr", coords=["time", "x"])
+print(sorted(r.v for r in read_zarr(spark, "store.zarr").collect()))
+spark.stop()
+"""
+
+
+def test_sink_workers_import_package_outside_checkout(tmp_path):
+    """The sink ships the package to executor Python workers itself: a
+    ``write_zarr`` that is a fresh session's first Zarr call succeeds
+    from a cwd outside the checkout with the checkout off PYTHONPATH
+    (the workers would otherwise fail with ModuleNotFoundError)."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p
+        for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.realpath(p) != os.path.realpath(repo)
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _SINK_OUTSIDE_CHECKOUT, repo],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    want = sorted(float(t * 10 + x) for t in range(3) for x in range(4))
+    assert out.stdout.strip().splitlines()[-1] == str(want)
+
+
 def test_sink_roundtrip_v3(spark, tmp_path):
     """v3 sink mode: flattened df -> per-node zarr.json + c/<i>/...
     chunk keys + consolidated root group -> the v3 read path scans it

@@ -97,6 +97,35 @@ def source_staleness_key(src: str, tag: str) -> str:
     ).hexdigest()[:10]
 
 
+_PKG_IMPORT = re.compile(
+    r"^\s*(?:from|import)\s+(zarr_datafusion_spark(?:\.\w+)*)", re.M
+)
+
+
+def package_source_digest(*modules: str) -> str:
+    """Digest of the source bytes of ``modules`` and of every package
+    module they import, followed transitively (module-level and
+    function-local imports alike).  Keys a fixture on the code that
+    builds it: an edit to any of those files changes the digest, and
+    the checkout path never enters it."""
+    import hashlib
+    import importlib.util
+
+    sources: dict[str, bytes] = {}
+    todo = list(modules)
+    while todo:
+        name = todo.pop()
+        if name in sources:
+            continue
+        with open(importlib.util.find_spec(name).origin, "rb") as f:
+            sources[name] = f.read()
+        todo += _PKG_IMPORT.findall(sources[name].decode())
+    h = hashlib.md5()
+    for name in sorted(sources):
+        h.update(name.encode() + b"\0" + sources[name] + b"\0")
+    return h.hexdigest()[:10]
+
+
 def prune_stale_siblings(
     parent: str, prefix: str, keep: str | set[str]
 ) -> None:

@@ -1664,22 +1664,3 @@ def tpch_q16_supplier_part_count(spark, sf_dir):
     One SQL string for both engines."""
     _views(spark, sf_dir)
     return spark.sql(_Q16_SQL)
-
-
-# The driver checks only the first ~50 global registry slots
-# (__spark_entry__ orders oracle-backed entries first, relational last).
-# Keep round-1-green names in this module's tail so any overflow falls
-# on entries whose correctness is already on record from round 1 —
-# never on a newly-named merged entry.
-_TAIL = (
-    "agg_time_bucket",
-    "array_functions",
-    "json_functions",
-    "distinct_vals",
-    "cte_recursive",
-    "agg_variance",
-)
-QUERIES = {
-    **{k: v for k, v in QUERIES.items() if k not in _TAIL},
-    **{k: QUERIES[k] for k in _TAIL if k in QUERIES},
-}

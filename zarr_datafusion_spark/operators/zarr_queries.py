@@ -1181,14 +1181,14 @@ def zarr_icechunk_append(spark, sf_dir):
     (the parquet mirror): a manifest merge that dropped, duplicated, or
     mis-keyed a chunk hash-mismatches here.  The repo is a KEYED
     fixture (ADVICE r12 — a per-run ``mkdtemp`` leaked a full repo per
-    driver check): keyed on the source fixture AND the append call
-    graph's fingerprint, so an ``append_snapshot`` code change rebuilds
-    the repo and re-exercises the sparse append, while unchanged code
-    reuses it; stale siblings are pruned.  Beyond-reference: the
-    reference has no sink, no appends, and no transactional layer
-    (roadmap ``README.md:330``)."""
-    from zarr_datafusion_spark import fingerprints
+    check): keyed on the source fixture AND the source of the
+    modules that build it, so a change to the transactional layer or
+    the sink rebuilds the repo and re-exercises the sparse append,
+    while unchanged code reuses it; stale siblings are pruned.
+    Beyond-reference: the reference has no sink, no appends, and no
+    transactional layer (roadmap ``README.md:330``)."""
     from zarr_datafusion_spark.operators.common import (
+        package_source_digest,
         prune_stale_siblings,
         publish_dir_atomically,
         source_staleness_key,
@@ -1200,15 +1200,12 @@ def zarr_icechunk_append(spark, sf_dir):
     )
 
     store = fixture_store(2)
-    # BOTH builders key the fixture: commit_zarr (the base image's
-    # writer — its graph reaches write_zarr/commit_store) and
-    # append_snapshot (the sparse append).  Keying on append_snapshot
-    # alone let a sink change silently reuse a repo whose base image
-    # the OLD sink wrote (r13 review).
-    code_key = (
-        fingerprints.entry_fingerprint(append_snapshot)[:10]
-        + fingerprints.entry_fingerprint(commit_zarr)[:10]
-    )
+    # The code key must cover BOTH builders — commit_zarr writes the
+    # base image through the sink, append_snapshot the sparse append —
+    # or a sink change silently reuses a repo the OLD sink wrote (r13
+    # review).  The digest follows icechunk.py's package imports, which
+    # reach the sink and the writer.
+    code_key = package_source_digest("zarr_datafusion_spark.zarr.icechunk")
     key = source_staleness_key(
         os.path.join(store, ".zgroup"), f"ic_append1:{code_key}"
     )

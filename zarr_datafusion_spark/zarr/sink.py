@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from zarr_datafusion_spark.zarr.datasource import _ensure_workers_can_import
 from zarr_datafusion_spark.zarr.writer import (
     _V2_DTYPE,
     _compress,
@@ -148,6 +149,7 @@ def write_zarr(
     if len(coords) < 2:
         raise ValueError("need >= 2 coordinate columns (data vars must be nD)")
     spark = df.sparkSession
+    _ensure_workers_can_import(spark)
     spark_to_np = {
         "tinyint": np.int8, "smallint": np.int16, "int": np.int32,
         "bigint": np.int64, "float": np.float32, "double": np.float64,
@@ -754,6 +756,7 @@ def append_zarr(df: DataFrame, store_path: str) -> dict[str, int]:
             )
 
     spark = df.sparkSession
+    _ensure_workers_can_import(spark)
     df = df.select(*coords, *data_vars).persist()
     try:
         old_outer = _read_1d(store_path, meta.array(outer))
@@ -957,6 +960,7 @@ def update_zarr_region(df: DataFrame, store_path: str) -> dict[str, int]:
     compressions = {v.name: _compression_token(v) for v in meta.data_vars}
 
     spark = df.sparkSession
+    _ensure_workers_can_import(spark)
     df = df.select(*coords, *data_vars).localCheckpoint()
     inner_values: dict[str, np.ndarray] = {}
     for c in inner:
