@@ -1,4 +1,4 @@
-"""Benchmark harness (driver contract: one JSON line on stdout).
+"""Benchmark harness: one JSON line on stdout.
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints
@@ -9,27 +9,15 @@ Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 Each query is forced end-to-end with a noop-format write (full
 materialization — ``count()`` alone lets Spark shortcut column reads).
 A warmup query runs first so JVM/codegen startup isn't billed to the
-first headline entry.
-
-Artifact durability (VERDICT r8 item 1): the driver keeps only the
-LAST ~4 KB of stdout, and at 89 queries the single per-query line
-outgrew that window in r8 (``BENCH_r08.json`` lost its front half and
-``parsed`` was null).  Three measures, in order of defense:
-
-1. the full per-query line still prints first (human/tooling record);
-2. a COMPACT summary line prints LAST — total + query count + the
-   watchlist queries only, well under 1 KB — so a tail capture always
-   ends with one complete parseable JSON line carrying the headline;
-3. the full result is also written to ``scripts/bench_local_latest.json``
-   (override: ``$SPARK_GRAFT_BENCH_OUT``), which is checked in at each
-   round's final run.
+first headline entry.  The same record is written to
+``scripts/bench_local_latest.json`` (override:
+``$SPARK_GRAFT_BENCH_OUT``).
 
 Headline growth policy (VERDICT r8 item 8): the headline set is PINNED
 at the 90 entries below (89 registry + the bench-only profile variant).  New operators from r9 on are benchmarked by
 the sf1 sweep (``scripts/sf1_sweep.py``, which times construction +
 action over the FULL registry) and may replace — never extend — a
-headline slot, so round-over-round totals stay comparable and the
-per-query line stops growing past the driver's capture window.
+headline slot, so round-over-round totals stay comparable.
 """
 
 from __future__ import annotations
@@ -169,18 +157,6 @@ HEADLINE = [
 _SUBSET = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
 if _SUBSET:
     HEADLINE = [q.strip() for q in _SUBSET.split(",") if q.strip()]
-
-#: Watchlist for the compact final line: the queries past VERDICTs put
-#: explicit bars on, plus the flagship zarr scan.  Keep this ≤ ~8 names
-#: so the line stays well under the driver's tail-capture window.
-WATCHLIST = [
-    "agg_groupby",          # r7 bar ≤1.5 s (met r8, record truncated)
-    "scale_bloom_join",     # r7 bar ≤0.6 s (met r8: 0.38)
-    "zarr_scan_era5_6m",    # flagship source throughput
-    "dedup_minhash_lsh",
-    "tpch_q3_shipping_priority",
-    "tpch_q19_discounted_revenue",  # r14 bar ≤0.45 s (box-sensitive sub-0.4s query)
-]
 
 #: Entries that do data-proportional work at CONSTRUCTION time
 #: (iterative trainers, eager localCheckpoints, streaming micro-batch
@@ -531,35 +507,6 @@ def main() -> None:
                 fh.write("\n")
         except OSError as e:
             print(f"WARNING: could not write {out}: {e}", file=sys.stderr)
-
-    # Compact FINAL line — must stay under the driver's ~4 KB tail
-    # capture so the headline total always survives verbatim.  Since
-    # r15 it carries the FULL per-query map at 3 decimals (~2.8 KB for
-    # 90 queries) so the driver's PERF per-query comparison works again
-    # (VERDICT r14 item 3: PERF_r14 had n_common=0 because only this
-    # line survives the tail capture and it held a 6-query watchlist).
-    # The preceding full line keeps the 4-decimal timings unchanged.
-    final = {
-        "metric": "headline_total",
-        "value": total,
-        "unit": "sec",
-        "n": len(timings),
-        "sf": sf,
-        "queries": {q: round(t, 3) for q, t in timings.items()},
-        "watch": {q: timings[q] for q in WATCHLIST if q in timings},
-        "probes": probes,
-        # normalized drift (rule: BASELINE.md r13) — capped at the
-        # worst 8 to keep this line inside the tail-capture budget
-        "probe_factor_vs_prev": probe_factor,
-        "normalized_regressions": [
-            {"query": d["query"], "ratio": d["ratio"]} for d in nreg[:8]
-        ],
-    }
-    line = json.dumps(final)
-    if len(line) > 3900:  # never let extras push the total out of the tail
-        final.pop("watch", None)
-        line = json.dumps(final)
-    print(line)
 
 
 if __name__ == "__main__":

@@ -206,6 +206,32 @@ def test_sql_registration(spark, stores):
         spark.sql("DROP VIEW IF EXISTS weather")
 
 
+def test_read_zarr_registers_source_once_per_session(spark, stores, monkeypatch):
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from zarr_datafusion_spark.zarr import read_zarr
+
+    calls = []
+    real_register = DataSourceRegistration.register
+
+    def counting_register(self, data_source):
+        calls.append(data_source.name())
+        return real_register(self, data_source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting_register)
+    # a new session has its own data-source registry; Spark checks
+    # registrations against the ACTIVE session's, so make it active
+    session = spark.newSession()
+    jvm_session = spark._jvm.org.apache.spark.sql.SparkSession
+    jvm_session.setActiveSession(session._jsparkSession)
+    try:
+        assert read_zarr(session, stores["v2_plain"]).count() == 700
+        assert read_zarr(session, stores["v3_plain"], columns=["time"]).count() == 700
+    finally:
+        jvm_session.setActiveSession(spark._jsparkSession)
+    assert calls == ["zarr"]
+
+
 def test_engine_register_zarr(spark, stores):
     from zarr_datafusion_spark.engine import Engine
 

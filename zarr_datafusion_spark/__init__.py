@@ -22,8 +22,14 @@ Catalyst, Arrow-vectorized Python only where built-ins cannot express
 the semantics.
 """
 
+from zarr_datafusion_spark import zipcache
 from zarr_datafusion_spark.engine import Engine
 from zarr_datafusion_spark.session import TABLES, get_spark, register_tables
+
+# every Spark Python worker call invalidates the import caches, and
+# pre-3.13 zipimporters then re-read pyspark.zip and the spark-core jar
+# in full; workers import this package, so install the lazy re-read here
+zipcache.install()
 
 __all__ = ["Engine", "TABLES", "get_spark", "register_tables"]
 

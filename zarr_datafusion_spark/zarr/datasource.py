@@ -996,12 +996,17 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
 
 
 def register_zarr_source(spark: SparkSession) -> None:
-    """Register the 'zarr' format with a session (idempotent)."""
+    """Register the 'zarr' format with a session (idempotent: a session
+    that already has it keeps its registration, so repeated
+    ``read_zarr`` calls neither re-ship the class nor make Spark warn
+    that the source was replaced)."""
     _ensure_workers_can_import(spark)
     # pushFilters requires this flag (off by default in Spark 4.1);
     # runtime-settable SQL conf, safe on any session we're handed.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(ZarrDataSource)
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(ZarrDataSource.name()):
+        spark.dataSource.register(ZarrDataSource)
 
 
 def read_zarr(
