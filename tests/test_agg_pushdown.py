@@ -283,6 +283,15 @@ def test_bail_shapes_fall_through(agg_engine, spark):
         # '2' and answers identically) — the literal-safety twin of the
         # r13 Engine.sql fuzz, applied to the pruning rewrites
         ("SELECT SUM(pressure) AS s FROM tc WHERE time = '2'", 1),
+        # clause combinations no rewrite serves
+        ("SELECT time, pressure FROM tc WHERE time >= 2 "
+         "ORDER BY time DESC, lat, lon LIMIT 5", 5),
+        ("SELECT time, lat, SUM(pressure) AS s FROM tc GROUP BY time, lat", 120),
+        ("SELECT time, lat, SUM(pressure) AS s FROM tc WHERE time >= 2 "
+         "GROUP BY time, lat", 100),
+        ("SELECT time, SUM(pressure) AS s FROM tc WHERE time >= 2 "
+         "GROUP BY time ORDER BY time", 10),
+        ("SELECT time AS t2 FROM tc WHERE time >= 11 AND lat = 0", 14),
     ]:
         df = agg_engine.sql(sql)
         assert not agg_engine.last_query_used_shortcut, sql
@@ -441,6 +450,54 @@ def test_shortcut_kind_accounting(agg_engine):
     assert agg_engine.last_shortcut_kind == "pruned"  # boundary slabs read
     agg_engine.sql("SELECT time, SUM(pressure) AS s FROM tc GROUP BY time")
     assert agg_engine.last_shortcut_kind is None  # full plan (outer_chunk=4)
+    for sql, kind in [
+        ("select sum(pressure) as s from tc where time between 4 and 7;",
+         "scan_free"),
+        ("SELECT COUNT(*) AS n FROM tc ;", "scan_free"),
+        ("SELECT * FROM tc WHERE time >= 2 AND lat < 3", "pruned"),
+        ("SELECT time, lat FROM tc ORDER BY time DESC LIMIT 3;", "pruned"),
+        ("SELECT time, SUM(pressure) AS s FROM tc WHERE lat < 3 GROUP BY time",
+         "pruned"),
+        ("SELECT time, pressure FROM tc WHERE time >= 2 ORDER BY time LIMIT 5",
+         None),
+        ("SELECT time, lat, SUM(pressure) AS s FROM tc GROUP BY time, lat", None),
+        ("SELECT time, SUM(pressure) AS s FROM tc WHERE time >= 2 "
+         "GROUP BY time ORDER BY time", None),
+        ("SELECT time AS t2 FROM tc WHERE time >= 2", None),
+    ]:
+        agg_engine.sql(sql)
+        assert agg_engine.last_shortcut_kind == kind, sql
+
+
+def test_one_schema_lookup_per_statement(agg_engine, spark, monkeypatch):
+    """``Engine.sql`` parses a statement once and looks its table's
+    schema up at most once for the whole rewrite chain; a statement
+    outside the subset, or over a table without statistics, makes no
+    schema or sidecar lookup."""
+    from zarr_datafusion_spark.stats import chunk_stats
+
+    tables, sidecars = [], []
+    table, sidecar = spark.table, chunk_stats.compute_zarr_chunk_stats
+    monkeypatch.setattr(spark, "table", lambda n: tables.append(n) or table(n))
+    monkeypatch.setattr(
+        chunk_stats, "compute_zarr_chunk_stats",
+        lambda sp, st: sidecars.append(st) or sidecar(sp, st),
+    )
+    spark.sql("SELECT * FROM tc").createOrReplaceTempView("tc_nostats")
+    try:
+        for sql, lookups in [
+            ("SELECT COUNT(*) AS n FROM tc_nostats", 0),
+            ("SELECT SUM(pressure) AS s FROM tc WHERE time >= 2 OR time <= 1", 0),
+            # declined by every rewrite but the last
+            ("SELECT time, SUM(pressure) AS s FROM tc WHERE lat < 3 GROUP BY time",
+             1),
+        ]:
+            tables.clear()
+            sidecars.clear()
+            agg_engine.sql(sql)
+            assert (len(tables), min(len(sidecars), 1)) == (lookups, lookups), sql
+    finally:
+        spark.catalog.dropTempView("tc_nostats")
 
 
 def test_ddl_options_enable_chunk_stats(spark):
@@ -568,3 +625,70 @@ def test_pruned_agg_rewrite(spark, tmp_path, monkeypatch):
     assert sorted(map(tuple, fast.collect())) == sorted(
         map(tuple, spark.sql(sql).collect())
     )
+
+
+_B = 2**53
+
+
+@pytest.fixture(scope="module")
+def literal_engine(spark, tmp_path_factory):
+    """Two tiny stores where a literal's SQL type decides the answer:
+    int64 coordinates and values at 2^53 + k (one outer index per
+    chunk, so every chunk row classifies scan-free), and float64
+    coordinates k/10 (two per chunk, so windows cut mid-chunk)."""
+    from zarr_datafusion_spark.engine import Engine
+    from zarr_datafusion_spark.zarr.writer import write_store
+
+    root = tmp_path_factory.mktemp("literals")
+    k = np.arange(8, dtype=np.int64)
+    write_store(str(root / "big"), {
+        "t": (_B + k, (1,)),
+        "x": (np.arange(2, dtype=np.int64), (2,)),
+        "v": (_B + 2 * k[:, None] + np.arange(2)[None, :], (1, 2)),
+    })
+    write_store(str(root / "tenths"), {
+        "t": (np.arange(16) / 10, (2,)),
+        "x": (np.arange(2, dtype=np.int64), (2,)),
+        "v": (np.arange(32, dtype=np.int64).reshape(16, 2), (2, 2)),
+    })
+    e = Engine(spark)
+    e.register_zarr("big", str(root / "big"), data_filter_pushdown=True)
+    e.register_zarr("tenths", str(root / "tenths"), data_filter_pushdown=True)
+    return e
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        # DECIMAL literals compare exactly against int64
+        "SELECT t, x, v FROM big WHERE t > 9007199254740993.5",
+        "SELECT COUNT(*) AS n FROM big "
+        "WHERE t >= 9007199254740993.5 AND t <= 9007199254740995.5",
+        "SELECT COUNT(*) AS n, MIN(v) AS lo FROM big WHERE v > 9007199254740997.5",
+        "SELECT COUNT(*) AS n FROM big WHERE v = 9007199254740995.0",
+        "SELECT t, x, v FROM big WHERE v = 9007199254740995.0",
+        # DOUBLE (exponent) literals round the int64 side to double
+        "SELECT COUNT(*) AS n FROM big WHERE t <= 9.007199254740992e15",
+        "SELECT COUNT(*) AS n FROM big WHERE t > 9.007199254740992e15",
+        "SELECT t, COUNT(*) AS n FROM big "
+        "WHERE t <= 9.007199254740992e15 GROUP BY t",
+        # integers past int64 are DECIMAL(20,0)
+        "SELECT COUNT(*) AS n FROM big WHERE t < 99999999999999999999",
+        "SELECT t, x FROM big WHERE t > -99999999999999999999",
+        # float coordinates compare DECIMAL literals as DOUBLE
+        "SELECT COUNT(*) AS n FROM tenths WHERE t > 0.1",
+        "SELECT COUNT(*) AS n FROM tenths WHERE t >= 0.3 AND t < 0.7",
+        "SELECT COUNT(*) AS n FROM tenths WHERE t = 0.3",
+        "SELECT COUNT(*) AS n FROM tenths WHERE t BETWEEN 0.1 AND 0.5",
+        "SELECT COUNT(*) AS n FROM tenths WHERE t > 1e-1",
+        "SELECT t, v FROM tenths WHERE t > 0.1",
+        "SELECT SUM(v) AS s FROM tenths WHERE t > 0.2 AND t <= 1.1",
+    ],
+)
+def test_literals_typed_as_spark_sql(literal_engine, spark, sql):
+    """Every rewrite types a numeric literal as Spark SQL does (integer,
+    DECIMAL or DOUBLE) and compares it against statistics in the type
+    Spark's coercion picks, so ``Engine.sql`` answers as ``spark.sql``."""
+    got = sorted(map(tuple, literal_engine.sql(sql).collect()))
+    assert literal_engine.last_query_used_shortcut, sql
+    assert got == sorted(map(tuple, spark.sql(sql).collect()))

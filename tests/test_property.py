@@ -1180,7 +1180,7 @@ _HOSTILE_TEXT = st.one_of(
 def _prune_conjuncts(draw):
     parts = []
     for _ in range(draw(st.integers(1, 4))):
-        kind = draw(st.integers(0, 6))
+        kind = draw(st.integers(0, 7))
         n = draw(st.integers(-2, 14))
         m = draw(st.integers(-2, 14))
         if kind == 0:
@@ -1199,8 +1199,13 @@ def _prune_conjuncts(draw):
         elif kind == 5:
             s = _esc(draw(_HOSTILE_TEXT))
             parts.append(f"{s} = {s}")
-        else:
+        elif kind == 6:
             parts.append(f"(time >= {min(n, m)} OR time <= {max(n, m)})")
+        else:
+            # DECIMAL and DOUBLE literals (Spark types them apart)
+            op = draw(st.sampled_from([">=", "<=", "<", ">", "="]))
+            lit = draw(st.sampled_from([f"{n}.5", f"{n}.0", f"{n}e0"]))
+            parts.append(f"time {op} {lit}")
     return " AND ".join(parts)
 
 

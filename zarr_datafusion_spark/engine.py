@@ -49,7 +49,8 @@ class Engine:
         #: table name -> zarr store path, for tables registered with
         #: chunk-row statistics (chunk-level aggregate pushdown)
         self._chunk_agg: dict[str, str] = {}
-        self._last_shortcut: str | None = None
+        #: "scan_free" | "pruned" when a rewrite answered the last sql()
+        self._last_shortcut_kind: str | None = None
 
     # ------------------------------------------------------------------
     # Registration
@@ -300,9 +301,8 @@ class Engine:
         ``count_optimization.rs:37-241`` / ``minmax_optimization.rs:43-239``),
         accept the reference's ``CREATE EXTERNAL TABLE ... STORED AS
         ZARR`` spelling, else delegate to Catalyst untouched."""
-        from zarr_datafusion_spark.stats.shortcuts import try_stats_shortcut
+        from zarr_datafusion_spark.stats.statement import parse
 
-        self._last_shortcut = None
         self._last_shortcut_kind = None
         # The reference's EXPLAIN VERBOSE (docs/CLI_REFERENCE.md:469-475)
         # is Spark's EXPLAIN EXTENDED — accept the DataFusion spelling
@@ -341,61 +341,57 @@ class Engine:
         rewritten = self._information_schema(query)
         if rewritten is not None:
             return rewritten
-        shortcut = try_stats_shortcut(self.spark, query, self._stats)
-        if shortcut is not None:
-            self._last_shortcut = query
-            self._last_shortcut_kind = "scan_free"
-            return shortcut
-        if self._chunk_agg:
-            from zarr_datafusion_spark.stats.agg_pushdown import (
-                try_chunk_agg_pushdown,
-            )
-            from zarr_datafusion_spark.stats.chunk_stats import (
-                compute_zarr_chunk_stats,
-            )
-            from zarr_datafusion_spark.stats.topk import try_topk_pushdown
+        stmt = parse(query)
+        if stmt is None or not (
+            stmt.table in self._stats or stmt.table in self._chunk_agg
+        ):
+            return self.spark.sql(query)
+        try:
+            schema = {
+                f.name: f.dataType
+                for f in self.spark.table(stmt.table).schema.fields
+            }
+        except Exception:
+            return self.spark.sql(query)
+        # looked up per call, so a patched rewrite takes effect
+        from zarr_datafusion_spark.stats import (
+            agg_pushdown,
+            filter_rewrite,
+            shortcuts,
+            topk,
+        )
 
-            stats_of = lambda store: compute_zarr_chunk_stats(  # noqa: E731
-                self.spark, store
-            )
-            pushed = try_chunk_agg_pushdown(
-                self.spark, query, self._chunk_agg, stats_of
-            )
-            if pushed is None:
+        out = shortcuts.try_stats_shortcut(
+            self.spark, stmt, schema, self._stats.get(stmt.table)
+        )
+        store = self._chunk_agg.get(stmt.table)
+        if out is None and store is not None:
+            for rewrite in (
+                agg_pushdown.try_chunk_agg_pushdown,
                 # coordinate-leading ORDER BY ... LIMIT k: scan only
                 # the slabs that can reach the top k (README.md:298)
-                pushed = try_topk_pushdown(
-                    self.spark, query, self._chunk_agg, stats_of
-                )
-            if pushed is None:
+                topk.try_topk_pushdown,
                 # plain filtered SELECT: fresh pruned relation per
                 # query (coordinate windows + data-var chunk skipping)
                 # — the multi-query-safe SQL route to the A5/data
                 # pruning the lazy view deliberately forgoes
-                from zarr_datafusion_spark.stats.filter_rewrite import (
-                    try_filter_rewrite,
-                    try_pruned_agg_rewrite,
-                )
-
-                pushed = try_filter_rewrite(
-                    self.spark, query, self._chunk_agg
-                )
-                if pushed is None:
-                    # aggregates the stats assembly declined (float
-                    # vars, data-var predicates, grouped multi-index
-                    # chunks): Spark computes, the scan still prunes
-                    pushed = try_pruned_agg_rewrite(
-                        self.spark, query, self._chunk_agg
-                    )
-            if pushed is not None:
-                self._last_shortcut = query
-                # honest accounting: boundary-slab assembly and top-k
-                # DO read their pruned slabs
-                self._last_shortcut_kind = getattr(
-                    pushed, "_zds_shortcut_kind", "scan_free"
-                )
-                return pushed
-        return self.spark.sql(query)
+                filter_rewrite.try_filter_rewrite,
+                # aggregates the stats assembly declined (float vars,
+                # data-var predicates, grouped multi-index chunks):
+                # Spark computes, the scan still prunes
+                filter_rewrite.try_pruned_agg_rewrite,
+            ):
+                out = rewrite(self.spark, stmt, schema, store)
+                if out is not None:
+                    break
+        if out is None:
+            return self.spark.sql(query)
+        # honest accounting: boundary-slab assembly and top-k DO read
+        # their pruned slabs
+        self._last_shortcut_kind = getattr(
+            out, "_zds_shortcut_kind", "scan_free"
+        )
+        return out
 
     #: a SQL single-quoted string literal ('' = escaped quote) — the
     #: rewrite below must never touch text inside one (ADVICE r6)
@@ -493,7 +489,7 @@ class Engine:
         statistics-pruned scan (boundary-slab aggregate assembly,
         coordinate-leading top-k); :attr:`last_shortcut_kind` says
         which."""
-        return self._last_shortcut is not None
+        return self._last_shortcut_kind is not None
 
     @property
     def last_shortcut_kind(self) -> str | None:
@@ -501,7 +497,7 @@ class Engine:
         shortcut-answered ``sql()`` call, else ``None``.  Drives the
         honest REPL stats line — a pruned top-k DOES read its tail
         slabs and must not claim "no scan"."""
-        return self._last_shortcut_kind if self._last_shortcut else None
+        return self._last_shortcut_kind
 
     def explain(self, query: str) -> str:
         """Physical-plan text for a SQL query (reference ``EXPLAIN`` /

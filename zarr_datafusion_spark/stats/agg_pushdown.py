@@ -37,165 +37,104 @@ Policy (same discipline as the NaN MIN/MAX withhold in
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# SELECT <items> FROM <bare-table> [WHERE <conds>] [GROUP BY <col>] —
-# nothing else.
-_QUERY_RE = re.compile(
-    r"^\s*select\s+(?P<items>.+?)\s+from\s+"
-    r"(?P<table>[A-Za-z_][A-Za-z0-9_]*)"
-    r"(?:\s+where\s+(?P<where>.+?))?"
-    r"(?:\s+group\s+by\s+(?P<group>[A-Za-z_][A-Za-z0-9_]*))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-_AGG_RE = re.compile(
-    r"^\s*(?P<fn>count|min|max|sum|avg)\s*\(\s*"
-    r"(?P<arg>\*|1|[A-Za-z_][A-Za-z0-9_]*)\s*\)"
-    r"\s*(?:as\s+(?P<alias>[A-Za-z_][A-Za-z0-9_]*))?\s*$",
-    re.IGNORECASE,
-)
-
-_NUM = r"[-+]?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?"
-_CMP_RE = re.compile(
-    rf"^\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s*"
-    rf"(?P<op><=|>=|<|>|=)\s*(?P<lit>{_NUM})\s*$"
-)
-
-def _num(text: str):
-    return float(text) if re.search(r"[.eE]", text) else int(text)
+from zarr_datafusion_spark.stats.statement import OPS, coerce, predicate
 
 
-def _parse_where(where: str | None, coord: str | None):
-    """Parse an AND-chain of comparisons on the single column ``coord``
-    into an interval ``(lo, lo_strict, hi, hi_strict)`` (``None`` bound
-    = unbounded).  Returns ``None`` if any conjunct doesn't fit, or
-    references another column."""
-    if where is None:
-        return (None, False, None, False)
-    lo = hi = None
-    lo_s = hi_s = False
-    # split on AND outside parens (no parens supported — bail on any)
-    if "(" in where or ")" in where:
-        return None
-    # rewrite BETWEEN a AND b into two conjuncts FIRST — its inner AND
-    # must not feed the conjunct split below
-    where = re.sub(
-        rf"([A-Za-z_][A-Za-z0-9_]*)\s+between\s+({_NUM})\s+and\s+({_NUM})",
-        r"\1 >= \2 AND \1 <= \3",
-        where,
-        flags=re.IGNORECASE,
-    )
-    for part in re.split(r"\s+and\s+", where, flags=re.IGNORECASE):
-        m = _CMP_RE.match(part)
-        if m is None:
-            return None
-        col = m.group("col")
-        op_bounds = [(m.group("op"), _num(m.group("lit")))]
-        if coord is None or col != coord:
-            return None
-        for op, val in op_bounds:
-            if op in (">", ">="):
-                if lo is None or val > lo or (val == lo and op == ">"):
-                    lo, lo_s = val, op == ">"
-            elif op in ("<", "<="):
-                if hi is None or val < hi or (val == hi and op == "<"):
-                    hi, hi_s = val, op == "<"
-            else:  # '='
-                if lo is None or val > lo:
-                    lo, lo_s = val, False
-                if hi is None or val < hi:
-                    hi, hi_s = val, False
-    return (lo, lo_s, hi, hi_s)
+def _classify(rmin, rmax, where, dtype):
+    """'in' (every value in ``[rmin, rmax]`` satisfies every conjunct),
+    'out' (some conjunct fails them all), or 'boundary'.  Each conjunct
+    compares in the type Spark's coercion picks for it (``coerce``), so
+    a DOUBLE literal rounds an int64 coordinate just as the scan does."""
+    if where and rmin != rmin:
+        return "boundary"  # NaN bounds: the scan decides
+    every = True
+    for _, op, lit in where or ():
+        lo, v = coerce(dtype, rmin, lit)
+        hi, _ = coerce(dtype, rmax, lit)
+        if op == "=":
+            some, all_ = lo <= v <= hi, lo == v == hi
+        else:
+            # a monotone bound holds everywhere iff it holds at the
+            # near end, somewhere iff it holds at the far end
+            near, far = (lo, hi) if op[0] == ">" else (hi, lo)
+            some, all_ = OPS[op](far, v), OPS[op](near, v)
+        if not some:
+            return "out"
+        every = every and all_
+    return "in" if every else "boundary"
 
 
-def _classify(rmin, rmax, interval):
-    """'in' (whole chunk row satisfies), 'out' (none of it does), or
-    'boundary'."""
-    lo, lo_s, hi, hi_s = interval
-    # fully outside?
-    if lo is not None and (rmax < lo or (rmax == lo and lo_s)):
-        return "out"
-    if hi is not None and (rmin > hi or (rmin == hi and hi_s)):
-        return "out"
-    # fully inside?
-    lo_ok = lo is None or rmin > lo or (rmin == lo and not lo_s)
-    hi_ok = hi is None or rmax < hi or (rmax == hi and not hi_s)
-    return "in" if (lo_ok and hi_ok) else "boundary"
-
-
-def try_chunk_agg_pushdown(
-    spark: SparkSession, query: str, providers: dict[str, str], stats_of
-) -> DataFrame | None:
-    """Answer ``query`` from chunk-row statistics + boundary-slab scans,
-    or return ``None`` (caller falls through to the full plan).
-
-    ``providers`` maps table name -> zarr store path (tables registered
-    with ``data_filter_pushdown=True``); ``stats_of(store_path)`` loads
-    the sidecar stats (``compute_zarr_chunk_stats`` — cached)."""
-    m = _QUERY_RE.match(query)
-    if m is None:
-        return None
-    table = m.group("table")
-    store = providers.get(table)
-    if store is None:
-        return None
-    try:
-        stats = stats_of(store)
-    except Exception:
-        return None
-    n_rows_list = len(stats.get("coord0_min", []))
-    if not stats.get("vars") or n_rows_list == 0 or not stats.get("inner_rows"):
-        return None
-
-    try:
-        schema = {f.name: f.dataType for f in spark.table(table).schema.fields}
-    except Exception:
-        return None
-
-    coord = stats.get("coord0")
-    where = m.group("where")
-    group = m.group("group")
-    interval = _parse_where(where, coord)
-    if interval is None:
-        return None
-    if group is not None:
-        # GROUP BY rollup path (hypertable-rollup shape): needs
-        # chunk-row == outer-index granularity; handles its own guards
-        return _grouped_rollup(
-            spark, stats, schema, m.group("items"), group, coord, interval
-        )
-    if where is not None and not stats.get("coord0_sorted"):
-        return None  # unsorted outer coord: boundary scan could double-count
-
-    # ---- parse the agg list -------------------------------------------
+def _agg_items(stmt, stats: dict, coord: str, group: str | None):
+    """``(fn, arg, name)`` per select item, ``fn == "group"`` for the
+    bare GROUP BY column, or ``None`` when an item is outside the
+    sidecar's policy (floats, withheld sums, unknown columns)."""
     items = []
-    for raw in m.group("items").split(","):
-        am = _AGG_RE.match(raw)
-        if am is None:
+    for item in stmt.items:
+        fn, arg = item.fn, item.arg
+        if group is not None and (fn, arg, item.alias) == (None, group, None):
+            items.append(("group", None, group))
+            continue
+        if fn is None:
             return None
-        fn = am.group("fn").lower()
-        arg = am.group("arg")
-        alias = am.group("alias")
         if fn == "count":
             if arg in ("*", "1"):
-                items.append(("count", None, alias or "count(1)"))
+                items.append(("count", None, item.name))
                 continue
             # zarr columns are dense (null_count 0): COUNT(col) = rows —
             # but only for columns this table actually has
             if arg != coord and arg not in stats["vars"]:
                 return None
-            items.append(("count", arg, alias or f"count({arg})"))
+            items.append(("count", arg, item.name))
             continue
         v = stats["vars"].get(arg)
         if v is None or v.get("kind") not in ("i", "u"):
             return None  # floats/unknown: full plan answers (see policy)
         if fn in ("sum", "avg") and any(s is None for s in v["sum"]):
             return None  # withheld sums (overflow guard)
-        items.append((fn, arg, alias or f"{fn}({arg})"))
+        items.append((fn, arg, item.name))
+    return items
+
+
+def try_chunk_agg_pushdown(
+    spark: SparkSession, stmt, schema: dict, store: str
+) -> DataFrame | None:
+    """Answer ``stmt`` from chunk-row statistics + boundary-slab scans,
+    or return ``None`` (caller falls through to the full plan).
+
+    ``store`` is the zarr store of a table registered with
+    ``data_filter_pushdown=True``; its sidecar stats come from
+    ``compute_zarr_chunk_stats`` (cached)."""
+    if stmt.order or stmt.limit is not None:
+        return None
+
+    from zarr_datafusion_spark.stats import chunk_stats
+
+    try:
+        stats = chunk_stats.compute_zarr_chunk_stats(spark, store)
+    except Exception:
+        return None
+    n_rows_list = len(stats.get("coord0_min", []))
+    if not stats.get("vars") or n_rows_list == 0 or not stats.get("inner_rows"):
+        return None
+
+    coord = stats.get("coord0")
+    where = stmt.where
+    if where is not None and (
+        coord is None or any(c != coord for c, _, _ in where)
+    ):
+        return None
+    if stmt.group is not None:
+        # GROUP BY rollup path (hypertable-rollup shape): needs
+        # chunk-row == outer-index granularity; handles its own guards
+        return _grouped_rollup(spark, stmt, stats, schema, coord)
+    if where is not None and not stats.get("coord0_sorted"):
+        return None  # unsorted outer coord: boundary scan could double-count
+    items = _agg_items(stmt, stats, coord, None)
+    if items is None:
+        return None
 
     # ---- classify chunk rows ------------------------------------------
     C, shape0, inner = stats["outer_chunk"], stats["shape0"], stats["inner_rows"]
@@ -204,7 +143,7 @@ def try_chunk_agg_pushdown(
         rmin, rmax = stats["coord0_min"][r], stats["coord0_max"][r]
         if rmin is None:
             return None  # non-numeric outer coord
-        cls = _classify(rmin, rmax, interval)
+        cls = _classify(rmin, rmax, where, schema.get(coord))
         if cls == "in":
             interior.append(r)
         elif cls == "boundary":
@@ -243,15 +182,6 @@ def try_chunk_agg_pushdown(
             return None  # the full plan raises ANSI overflow; we must too
 
     # ---- boundary slab scans (only those slabs) -----------------------
-    def _pred(col):
-        lo, lo_s, hi, hi_s = interval
-        p = F.lit(True)
-        if lo is not None:
-            p = p & (col > F.lit(lo) if lo_s else col >= F.lit(lo))
-        if hi is not None:
-            p = p & (col < F.lit(hi) if hi_s else col <= F.lit(hi))
-        return p
-
     aggs = [F.count(F.lit(1)).alias("_bn")]
     for v in vars_needed:
         if v in sum_vars:
@@ -269,7 +199,7 @@ def try_chunk_agg_pushdown(
             df = read_zarr(spark, store, eager_pushdown=True)
             c = F.col(coord)
             scans.append(
-                df.filter(c.between(F.lit(rmin), F.lit(rmax)) & _pred(c))
+                df.filter(c.between(F.lit(rmin), F.lit(rmax)) & predicate(where))
             )
         b = scans[0]
         for s in scans[1:]:
@@ -337,10 +267,7 @@ def try_chunk_agg_pushdown(
 _ROLLUP_MAX_GROUPS = 100_000
 
 
-def _grouped_rollup(
-    spark, stats: dict, schema: dict, items_text: str, group: str,
-    coord: str | None, interval,
-):
+def _grouped_rollup(spark, stmt, stats: dict, schema: dict, coord: str | None):
     """``SELECT coord0, AGGs FROM t [WHERE coord0 ...] GROUP BY coord0``
     answered entirely from the sidecar — the hypertable-rollup shape
     (per-time-bucket SUM/AVG over an append-axis store).  Requires
@@ -354,6 +281,7 @@ def _grouped_rollup(
     ``_ROLLUP_MAX_GROUPS`` groups bail to the distributed plan."""
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+    group = stmt.group
     if group != coord or stats.get("outer_chunk") != 1:
         return None
     n_rows_list = len(stats.get("coord0_min", []))
@@ -361,32 +289,7 @@ def _grouped_rollup(
         return None
 
     # ---- items: the bare group column plus the supported aggs --------
-    items = []  # (kind, arg, out_name)
-    for raw in items_text.split(","):
-        raw_s = raw.strip()
-        if re.fullmatch(rf"{group}", raw_s):
-            items.append(("group", None, group))
-            continue
-        am = _AGG_RE.match(raw_s)
-        if am is None:
-            return None
-        fn = am.group("fn").lower()
-        arg = am.group("arg")
-        alias = am.group("alias")
-        if fn == "count":
-            if arg in ("*", "1"):
-                items.append(("count", None, alias or "count(1)"))
-                continue
-            if arg != coord and arg not in stats["vars"]:
-                return None
-            items.append(("count", arg, alias or f"count({arg})"))
-            continue
-        v = stats["vars"].get(arg)
-        if v is None or v.get("kind") not in ("i", "u"):
-            return None  # float policy: full plan answers
-        if fn in ("sum", "avg") and any(s is None for s in v["sum"]):
-            return None
-        items.append((fn, arg, alias or f"{fn}({arg})"))
+    items = _agg_items(stmt, stats, coord, group)  # (kind, arg, out_name)
     if not items:
         return None
 
@@ -404,7 +307,7 @@ def _grouped_rollup(
         cv = stats["coord0_min"][r]
         if cv is None or cv != stats["coord0_max"][r]:
             return None  # non-numeric or inconsistent row bounds
-        if _classify(cv, cv, interval) != "in":
+        if _classify(cv, cv, stmt.where, schema.get(coord)) != "in":
             continue
         a = acc.get(cv)
         if a is None:

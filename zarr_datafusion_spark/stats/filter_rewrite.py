@@ -17,84 +17,34 @@ identical to the view's by the Inexact contract: Spark re-applies the
 full predicate; pruning only ever removes provably-empty chunk rows
 (NaN-is-largest rules included — they live in the source pruner).
 
-Guards: plain column projection, an AND-chain of ``col <op> numeric``
-conjuncts (every column in the table schema), no GROUP BY / ORDER BY /
-LIMIT (those routes belong to the aggregate and top-k rewrites).
+Guards: plain column projection, a WHERE of parsed conjuncts
+(:mod:`~zarr_datafusion_spark.stats.statement`; every column in the
+table schema), no GROUP BY / ORDER BY / LIMIT (those routes belong to
+the aggregate and top-k rewrites).
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_NUM = r"[-+]?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?"
-
-_FILTER_RE = re.compile(
-    r"^\s*select\s+(?P<cols>\*|[A-Za-z0-9_,\s]+?)\s+from\s+"
-    r"(?P<table>[A-Za-z_][A-Za-z0-9_]*)\s+"
-    r"where\s+(?P<where>.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-_CMP_RE = re.compile(
-    rf"^\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s*"
-    rf"(?P<op><=|>=|<|>|=)\s*(?P<lit>{_NUM})\s*$"
-)
-
-_OPS = {
-    ">": lambda c, v: c > v,
-    ">=": lambda c, v: c >= v,
-    "<": lambda c, v: c < v,
-    "<=": lambda c, v: c <= v,
-    "=": lambda c, v: c == v,
-}
+from zarr_datafusion_spark.stats.statement import predicate
 
 
 def try_filter_rewrite(
-    spark: SparkSession, query: str, providers: dict[str, str]
+    spark: SparkSession, stmt, schema: dict, store: str
 ) -> DataFrame | None:
     """Rewrite an eligible filtered SELECT onto a fresh pruned scan, or
     return ``None`` (the registered lazy view answers)."""
-    m = _FILTER_RE.match(query)
-    if m is None:
+    if (
+        stmt.where is None
+        or stmt.group is not None
+        or stmt.order
+        or stmt.limit is not None
+    ):
         return None
-    store = providers.get(m.group("table"))
-    if store is None:
-        return None
-    where = m.group("where")
-    if "(" in where or ")" in where:
-        return None
-    # BETWEEN a AND b -> two conjuncts before the AND split
-    where = re.sub(
-        rf"([A-Za-z_][A-Za-z0-9_]*)\s+between\s+({_NUM})\s+and\s+({_NUM})",
-        r"\1 >= \2 AND \1 <= \3",
-        where,
-        flags=re.IGNORECASE,
-    )
-    conjuncts = []
-    for part in re.split(r"\s+and\s+", where, flags=re.IGNORECASE):
-        cm = _CMP_RE.match(part)
-        if cm is None:
-            return None
-        lit = cm.group("lit")
-        val = float(lit) if re.search(r"[.eE]", lit) else int(lit)
-        conjuncts.append((cm.group("col"), cm.group("op"), val))
-    if not conjuncts:
-        return None
-
-    try:
-        schema = [f.name for f in spark.table(m.group("table")).schema.fields]
-    except Exception:
-        return None
-    cols_text = m.group("cols").strip()
-    cols = schema if cols_text == "*" else [
-        c.strip() for c in cols_text.split(",")
-    ]
-    if any(c not in schema for c in cols):
-        return None
-    if any(c not in schema for c, _, _ in conjuncts):
+    cols = stmt.columns(schema)
+    if cols is None or any(c not in schema for c, _, _ in stmt.where):
         return None
 
     from zarr_datafusion_spark.zarr import read_zarr
@@ -102,39 +52,13 @@ def try_filter_rewrite(
     df = read_zarr(
         spark, store, eager_pushdown=True, data_filter_pushdown=True
     )
-    pred = F.lit(True)
-    for c, op, val in conjuncts:
-        pred = pred & _OPS[op](F.col(c), F.lit(val))
-    out = df.filter(pred).select(*cols)
+    out = df.filter(predicate(stmt.where)).select(*cols)
     out._zds_shortcut_kind = "pruned"
     return out
 
 
-_AGG_ITEM_RE = re.compile(
-    r"^\s*(?P<fn>count|min|max|sum|avg)\s*\(\s*"
-    r"(?P<arg>\*|1|[A-Za-z_][A-Za-z0-9_]*)\s*\)"
-    r"\s*(?:as\s+(?P<alias>[A-Za-z_][A-Za-z0-9_]*))?\s*$",
-    re.IGNORECASE,
-)
-
-_AGG_QUERY_RE = re.compile(
-    r"^\s*select\s+(?P<items>.+?)\s+from\s+"
-    r"(?P<table>[A-Za-z_][A-Za-z0-9_]*)\s+"
-    r"where\s+(?P<where>.+?)"
-    r"(?:\s+group\s+by\s+(?P<group>[A-Za-z_][A-Za-z0-9_]*))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-_AGG_FNS = {
-    "sum": F.sum,
-    "avg": F.avg,
-    "min": F.min,
-    "max": F.max,
-}
-
-
 def try_pruned_agg_rewrite(
-    spark: SparkSession, query: str, providers: dict[str, str]
+    spark: SparkSession, stmt, schema: dict, store: str
 ) -> DataFrame | None:
     """Aggregates the statistics assembly could NOT answer (float
     variables, data-variable predicates, unsorted coordinates with a
@@ -146,72 +70,31 @@ def try_pruned_agg_rewrite(
     provably-empty chunk reads disappear), so this rewrite has no
     float/NaN/overflow policy to enforce; it runs LAST in the engine's
     rewrite chain, after the scan-free paths had their chance."""
-    m = _AGG_QUERY_RE.match(query)
-    if m is None:
+    group = stmt.group
+    if stmt.where is None or stmt.order or stmt.limit is not None:
         return None
-    store = providers.get(m.group("table"))
-    if store is None:
-        return None
-    where = m.group("where")
-    group = m.group("group")
-    if "(" in where or ")" in where:
-        return None
-    where = re.sub(
-        rf"([A-Za-z_][A-Za-z0-9_]*)\s+between\s+({_NUM})\s+and\s+({_NUM})",
-        r"\1 >= \2 AND \1 <= \3",
-        where,
-        flags=re.IGNORECASE,
-    )
-    conjuncts = []
-    for part in re.split(r"\s+and\s+", where, flags=re.IGNORECASE):
-        cm = _CMP_RE.match(part)
-        if cm is None:
-            return None
-        lit = cm.group("lit")
-        val = float(lit) if re.search(r"[.eE]", lit) else int(lit)
-        conjuncts.append((cm.group("col"), cm.group("op"), val))
-    if not conjuncts:
-        return None
-
-    try:
-        schema = [f.name for f in spark.table(m.group("table")).schema.fields]
-    except Exception:
-        return None
-    if any(c not in schema for c, _, _ in conjuncts):
+    if any(c not in schema for c, _, _ in stmt.where):
         return None
     if group is not None and group not in schema:
         return None
 
     aggs = []
     out_names = []  # statement item order — the output column order
-    for raw in m.group("items").split(","):
-        raw_s = raw.strip()
-        if group is not None and raw_s == group:
+    for item in stmt.items:
+        fn, arg = item.fn, item.arg
+        if group is not None and (fn, arg, item.alias) == (None, group, None):
             out_names.append(group)
             continue
-        am = _AGG_ITEM_RE.match(raw_s)
-        if am is None:
+        if fn is None:
             return None
-        fn = am.group("fn").lower()
-        arg = am.group("arg")
-        alias = am.group("alias")
-        if fn == "count":
-            if arg in ("*", "1"):
-                name = alias or "count(1)"
-                aggs.append(F.count(F.lit(1)).alias(name))
-                out_names.append(name)
-                continue
-            if arg not in schema:
-                return None
-            name = alias or f"count({arg})"
-            aggs.append(F.count(arg).alias(name))
-            out_names.append(name)
-            continue
-        if arg not in schema:
+        if fn == "count" and arg in ("*", "1"):
+            agg = F.count(F.lit(1))
+        elif arg not in schema:
             return None
-        name = alias or f"{fn}({arg})"
-        aggs.append(_AGG_FNS[fn](arg).alias(name))
-        out_names.append(name)
+        else:
+            agg = getattr(F, fn)(arg)
+        aggs.append(agg.alias(item.name))
+        out_names.append(item.name)
     if not aggs or len(set(out_names)) != len(out_names):
         return None
 
@@ -220,10 +103,7 @@ def try_pruned_agg_rewrite(
     df = read_zarr(
         spark, store, eager_pushdown=True, data_filter_pushdown=True
     )
-    pred = F.lit(True)
-    for c, op, val in conjuncts:
-        pred = pred & _OPS[op](F.col(c), F.lit(val))
-    df = df.filter(pred)
+    df = df.filter(predicate(stmt.where))
     base = df.groupBy(group).agg(*aggs) if group is not None else df.agg(*aggs)
     out = base.select(*out_names)  # statement item order
     out._zds_shortcut_kind = "pruned"

@@ -12,9 +12,11 @@ rules:
 Catalyst has no hook for source-provided exact stats on arbitrary
 tables (its ``OptimizeMetadataOnlyQuery`` covers partition metadata
 only), so per SURVEY §2 A7/A8 the rewrite lives at the engine-API
-layer: ``Engine.sql()`` recognizes the narrow agg-only pattern and
-answers from cached :class:`~zarr_datafusion_spark.engine.TableStats`,
-falling through to ``spark.sql`` for anything else.  The guard
+layer: ``Engine.sql()`` parses the statement once
+(:mod:`~zarr_datafusion_spark.stats.statement`), and this rewrite
+answers the narrow agg-only shape from cached
+:class:`~zarr_datafusion_spark.engine.TableStats`, falling through to
+``spark.sql`` for anything else.  The guard
 discipline mirrors the reference: any deviation (a WHERE, a GROUP BY, a
 join, a non-agg item, a column without exact stats) bails to the full
 plan — correctness never depends on the shortcut.
@@ -29,81 +31,47 @@ scan, which tests assert the same way the reference asserts
 from __future__ import annotations
 
 import calendar
-import re
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
-# SELECT <items> FROM <bare-table-identifier> — nothing else.
-_QUERY_RE = re.compile(
-    r"^\s*select\s+(?P<items>.+?)\s+from\s+(?P<table>[A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-# count(*) | count(1) | count(col) | min(col) | max(col)  [AS alias]
-_AGG_RE = re.compile(
-    r"^\s*(?P<fn>count|min|max)\s*\(\s*(?P<arg>\*|1|[A-Za-z_][A-Za-z0-9_]*)\s*\)"
-    r"\s*(?:as\s+(?P<alias>[A-Za-z_][A-Za-z0-9_]*))?\s*$",
-    re.IGNORECASE,
-)
-
 
 def try_stats_shortcut(
-    spark: SparkSession, query: str, stats_by_table: dict
+    spark: SparkSession, stmt, schema: dict, stats
 ) -> DataFrame | None:
-    """Return a scan-free one-row DataFrame answering ``query`` from
-    exact statistics, or ``None`` if the query doesn't match the narrow
-    supported shape (the caller then runs the full plan)."""
-    m = _QUERY_RE.match(query)
-    if not m:
-        return None
-    table = m.group("table")
-    stats = stats_by_table.get(table)
-    if stats is None:
-        return None
-
-    # Reject anything beyond a flat agg list (subqueries would contain
-    # parens with SELECT, WHERE/GROUP BY would fail the regex above,
-    # commas inside these simple agg calls are impossible).
-    items = [item for item in m.group("items").split(",")]
-
-    try:
-        schema = {f.name: f.dataType for f in spark.table(table).schema.fields}
-    except Exception:
+    """Return a scan-free one-row DataFrame answering ``stmt`` (a parsed
+    :class:`~zarr_datafusion_spark.stats.statement.Statement`) from the
+    table's exact ``stats``, or ``None`` if it isn't a bare
+    COUNT/MIN/MAX list (the caller then runs the full plan)."""
+    if (
+        stats is None
+        or stmt.where is not None
+        or stmt.group is not None
+        or stmt.order
+        or stmt.limit is not None
+    ):
         return None
 
     cols = []
-    for item in items:
-        am = _AGG_RE.match(item)
-        if am is None:
-            return None
-        fn = am.group("fn").lower()
-        arg = am.group("arg")
-        alias = am.group("alias")
-
+    for item in stmt.items:
+        fn, arg = item.fn, item.arg
         if fn == "count":
             if arg in ("*", "1"):
                 value = stats.row_count
-                # Catalyst rewrites COUNT(*) to count(1) — match its
-                # output column name so shortcut and fallback schemas
-                # are identical for unaliased queries.
-                default_name = "count(1)"
             else:
                 # COUNT(col) = rows - nulls; requires exact null count
                 # (guard parity: count_optimization.rs null_count check).
                 if arg not in stats.column_null_count or arg not in schema:
                     return None
                 value = stats.row_count - stats.column_null_count[arg]
-                default_name = f"count({arg})"
             col = F.lit(value).cast("bigint")
-        else:  # min / max
+        elif fn in ("min", "max"):
             if arg not in stats.column_min_max or arg not in schema:
                 return None
             lo, hi = stats.column_min_max[arg]
             value = lo if fn == "min" else hi
-            default_name = f"{fn}({arg})"
             if isinstance(schema[arg], TimestampType) and isinstance(
                 value, datetime
             ):
@@ -119,6 +87,10 @@ def try_stats_shortcut(
                 col = F.timestamp_micros(F.lit(us))
             else:
                 col = F.lit(value).cast(schema[arg])
-        cols.append(col.alias(alias if alias else default_name))
+        else:  # a bare column, SUM or AVG
+            return None
+        # the item's Spark output name, so shortcut and fallback
+        # schemas are identical for unaliased queries
+        cols.append(col.alias(item.name))
 
     return spark.range(1).select(*cols)

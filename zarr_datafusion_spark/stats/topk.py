@@ -28,38 +28,30 @@ chunk of extra rows beyond the row-exact optimum, never more.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_TOPK_RE = re.compile(
-    r"^\s*select\s+(?P<cols>\*|[A-Za-z0-9_,\s]+?)\s+from\s+"
-    r"(?P<table>[A-Za-z_][A-Za-z0-9_]*)\s+"
-    r"order\s+by\s+(?P<order>[A-Za-z0-9_,\s]+?)\s+"
-    r"limit\s+(?P<k>\d+)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-_ORDER_KEY_RE = re.compile(
-    r"^\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s*(?P<dir>asc|desc)?\s*$",
-    re.IGNORECASE,
-)
-
 
 def try_topk_pushdown(
-    spark: SparkSession, query: str, providers: dict[str, str], stats_of
+    spark: SparkSession, stmt, schema: dict, store: str
 ) -> DataFrame | None:
-    """Answer a coordinate-leading top-k ``query`` with a
+    """Answer a coordinate-leading top-k statement with a
     threshold-pruned scan, or return ``None`` (full plan)."""
-    m = _TOPK_RE.match(query)
-    if m is None:
+    if (
+        stmt.where is not None
+        or stmt.group is not None
+        or not stmt.order
+        or stmt.limit is None
+    ):
         return None
-    store = providers.get(m.group("table"))
-    if store is None:
+    cols = stmt.columns(schema)
+    if cols is None or any(c not in schema for c, _ in stmt.order):
         return None
+
+    from zarr_datafusion_spark.stats import chunk_stats
+
     try:
-        stats = stats_of(store)
+        stats = chunk_stats.compute_zarr_chunk_stats(spark, store)
     except Exception:
         return None
     coord = stats.get("coord0")
@@ -69,37 +61,15 @@ def try_topk_pushdown(
         or n_rows == 0
         or not stats.get("coord0_sorted")
         or not stats.get("inner_rows")
+        # the leading ORDER BY key must be the outer coordinate
+        or stmt.order[0][0] != coord
     ):
         return None
 
-    # ---- ORDER BY list: leading key must be the outer coordinate ----
-    keys = []
-    for part in m.group("order").split(","):
-        om = _ORDER_KEY_RE.match(part)
-        if om is None:
-            return None
-        keys.append((om.group("col"), (om.group("dir") or "asc").lower()))
-    if not keys or keys[0][0] != coord:
-        return None
-
-    try:
-        schema = [f.name for f in spark.table(m.group("table")).schema.fields]
-    except Exception:
-        return None
-    cols_text = m.group("cols").strip()
-    if cols_text == "*":
-        cols = schema
-    else:
-        cols = [c.strip() for c in cols_text.split(",")]
-        if any(c not in schema for c in cols):
-            return None
-    if any(c not in schema for c, _ in keys):
-        return None
-
     # ---- threshold: smallest slab suffix/prefix holding >= k rows ----
-    k = int(m.group("k"))
+    k = stmt.limit
     C, shape0, inner = stats["outer_chunk"], stats["shape0"], stats["inner_rows"]
-    desc = keys[0][1] == "desc"
+    desc = stmt.order[0][1]
     acc = 0
     threshold = None
     order_rs = range(n_rows - 1, -1, -1) if desc else range(n_rows)
@@ -118,8 +88,7 @@ def try_topk_pushdown(
     c = F.col(coord)
     df = df.filter(c >= F.lit(threshold) if desc else c <= F.lit(threshold))
     order_cols = [
-        F.col(name).desc() if d == "desc" else F.col(name).asc()
-        for name, d in keys
+        F.col(name).desc() if d else F.col(name).asc() for name, d in stmt.order
     ]
     out = df.select(*cols).orderBy(*order_cols).limit(k)
     out._zds_shortcut_kind = "pruned"  # it reads its threshold slabs
