@@ -218,6 +218,27 @@ def plan_text(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def jobs_launched(spark, fn) -> tuple:
+    """Run ``fn()`` under a fresh Spark job group and return ``(its
+    result, the ids of the jobs it launched)``.  The listener bus is
+    drained first, so a job that ran is never missed; the caller's job
+    group is restored afterwards."""
+    import uuid
+
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    saved = [sc.getLocalProperty(k) for k in keys]
+    group = f"jobs-launched-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        for k, v in zip(keys, saved):
+            sc.setLocalProperty(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     """Sort columns by name and rows by all values (driver compare is
     order-insensitive); normalize timestamps to us precision."""

@@ -14,7 +14,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from tests.conftest import plan_text
+from tests.conftest import jobs_launched, plan_text
 
 
 @pytest.fixture(scope="module")
@@ -113,6 +113,7 @@ def test_boundary_slabs_only_are_read(spark, tmp_path, monkeypatch):
     assert (row.s, row.n) == (expect, 8 * 10 * 14)
     s = collect_stats_dir(sd)
     assert s.rows == 4 * 10 * 14, "read beyond the boundary windows"
+    assert s.n_arrays == 2, "read arrays beyond time and pressure"
 
 
 def test_float_and_unsorted_and_overflow_bail(spark, tmp_path):
@@ -564,6 +565,16 @@ def test_sql_filter_rewrite_prunes_and_matches(spark, tmp_path, monkeypatch):
     # pressure >= 1075 skips slabs t<6 via data stats; lat > 2 narrows
     # the lat window to 7 of 10 — 6 slabs x 7 lats x 14 lons
     assert s.rows == 6 * 7 * 14, "rewrite did not prune the scan"
+    assert s.n_arrays == 4  # time, lat, lon, pressure: all referenced
+
+    # a narrower statement opens only the arrays it references
+    import shutil
+
+    shutil.rmtree(sd, ignore_errors=True)
+    narrow = "SELECT lon, pressure FROM tr_fr WHERE pressure >= 1075"
+    narrow_rows = sorted(map(tuple, e.sql(narrow).collect()))
+    assert collect_stats_dir(sd).n_arrays == 2
+    assert narrow_rows == sorted(map(tuple, spark.sql(narrow).collect()))
     assert fast_rows == sorted(map(tuple, spark.sql(sql).collect()))
 
     # the named view itself stays lazy and multi-query-safe
@@ -610,6 +621,7 @@ def test_pruned_agg_rewrite(spark, tmp_path, monkeypatch):
     got = fast.collect()
     s = collect_stats_dir(sd)
     assert s.rows == 2 * 4 * 10 * 14, "data-var pruning did not skip slabs"
+    assert s.n_arrays == 1, "read arrays the statement never references"
     assert got == spark.sql(sql).collect()
 
     # grouped over multi-index chunks (stats assembly bails: outer
@@ -692,3 +704,261 @@ def test_literals_typed_as_spark_sql(literal_engine, spark, sql):
     got = sorted(map(tuple, literal_engine.sql(sql).collect()))
     assert literal_engine.last_query_used_shortcut, sql
     assert got == sorted(map(tuple, spark.sql(sql).collect()))
+
+
+def _collect(engine, sql):
+    """``Engine.sql(sql)`` collected, and the route that answered it."""
+    return engine.sql(sql).collect(), engine.last_shortcut_kind
+
+
+@pytest.mark.parametrize(
+    "sql, kind",
+    [
+        ("SELECT COUNT(*) AS n FROM tc", "scan_free"),
+        ("SELECT MIN(pressure) AS lo, MAX(pressure) AS hi FROM tc", "scan_free"),
+        # every matching chunk row interior: folded from the sidecar
+        ("SELECT SUM(pressure) AS s, COUNT(*) AS n, AVG(pressure) AS a "
+         "FROM tc WHERE time BETWEEN 4 AND 7", "scan_free"),
+        # an empty window: NULL SUM/AVG/MIN, COUNT 0
+        ("SELECT SUM(pressure) AS s, COUNT(*) AS n, AVG(pressure) AS a, "
+         "MIN(pressure) AS lo FROM tc WHERE time > 100", "scan_free"),
+        # pruned windows far below the split threshold, read on the driver
+        ("SELECT time, lat, lon, pressure FROM tc "
+         "WHERE time BETWEEN 2 AND 5 AND lat = 3", "pruned"),
+        ("SELECT lon, pressure FROM tc WHERE pressure >= 1075 AND lat > 2",
+         "pruned"),
+        ("SELECT * FROM tc WHERE time > 100", "pruned"),
+    ],
+)
+def test_driver_sized_answers_launch_no_job(agg_engine, spark, sql, kind):
+    """Scan-free answers and filtered SELECTs whose pruned window is
+    below the planner's split threshold are local relations: the whole
+    statement, ``Engine.sql`` through ``collect``, launches no Spark
+    job, and the rows equal the plain plan's."""
+    (rows, got_kind), jobs = jobs_launched(spark, lambda: _collect(agg_engine, sql))
+    assert (got_kind, jobs) == (kind, []), sql
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, spark.sql(sql).collect()))
+
+
+def test_rollup_and_typed_bounds_launch_no_job(engine, spark, tmp_path):
+    """The grouped rollup and timestamp/string MIN/MAX answers are
+    local relations too (the rollup used to run an RDD job)."""
+    from tests.test_zarr_source import _station_store
+    from zarr_datafusion_spark.operators.zarr_queries import trending_store
+
+    engine.register_zarr("tr_jobs", trending_store(), data_filter_pushdown=True)
+    engine.register_zarr("st_jobs", _station_store(tmp_path))
+    for sql in [
+        "SELECT time, SUM(pressure) AS s, AVG(pressure) AS a, COUNT(*) AS n "
+        "FROM tr_jobs WHERE time >= 3 GROUP BY time",
+        "SELECT MIN(ts) AS lo, MAX(ts) AS hi FROM events",
+        "SELECT COUNT(*) AS n, MIN(station) AS lo, MAX(station) AS hi FROM st_jobs",
+    ]:
+        (rows, kind), jobs = jobs_launched(spark, lambda: _collect(engine, sql))
+        assert (kind, jobs) == ("scan_free", []), sql
+        assert sorted(map(tuple, rows)) == sorted(
+            map(tuple, spark.sql(sql).collect())
+        ), sql
+
+
+def test_filtered_select_over_split_window_stays_distributed(spark, tmp_path):
+    """A filtered SELECT whose pruned window holds two splits' worth of
+    rows keeps the distributed pruned scan: it plans one partition per
+    split (as far as the parallelism allows) and launches Spark jobs,
+    with the plain plan's rows."""
+    from zarr_datafusion_spark.engine import Engine
+    from zarr_datafusion_spark.zarr.datasource import ZarrDataSourceReader
+    from zarr_datafusion_spark.zarr.writer import write_store
+
+    nt, nx, ny = 16, 96, 96
+    split = ZarrDataSourceReader.MIN_PARTITION_ROWS
+    assert 2 * split <= (nt - 1) * nx * ny < 3 * split
+    store = write_store(
+        str(tmp_path / "wide.zarr"),
+        {
+            "t": (np.arange(nt, dtype=np.int64), (nt,)),
+            "x": (np.arange(nx, dtype=np.int64), (nx,)),
+            "y": (np.arange(ny, dtype=np.int64), (ny,)),
+            "v": (np.arange(nt * nx * ny, dtype=np.int32).reshape(nt, nx, ny),
+                  (1, nx, ny)),
+        },
+    )
+    import zarr_datafusion_spark.zarr as Z
+
+    e = Engine(spark)
+    e.register_zarr("wide", store, data_filter_pushdown=True)
+    sql = "SELECT t, v FROM wide WHERE t >= 1"
+    orig, seen = Z.read_zarr, []
+
+    def instrumented(spark_, store_, **kw):
+        seen.append(kw.get("filters"))
+        return orig(spark_, store_, **kw)
+
+    Z.read_zarr = instrumented
+    try:
+        fast = e.sql(sql)
+    finally:
+        Z.read_zarr = orig
+    # the sidecar already bounds the window above the split threshold,
+    # so the driver plans nothing itself
+    assert seen == [None]
+    assert e.last_shortcut_kind == "pruned"
+    assert "BatchScan" in plan_text(fast)
+    assert fast.rdd.getNumPartitions() == min(
+        2, spark.sparkContext.defaultParallelism
+    )
+    rows, jobs = jobs_launched(spark, fast.collect)
+    assert jobs
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, spark.sql(sql).collect()))
+
+
+def test_driver_read_answer_is_a_snapshot(spark, tmp_path):
+    """A filtered SELECT read on the driver is a snapshot taken at
+    ``Engine.sql`` time: collecting the same DataFrame after an
+    in-place region update returns the old rows, while a new statement
+    sees the update, as the plain plan does."""
+    from pyspark.sql import functions as F
+
+    from zarr_datafusion_spark.engine import Engine
+    from zarr_datafusion_spark.zarr.sink import update_zarr_region, write_zarr
+
+    store = str(tmp_path / "live.zarr")
+    write_zarr(
+        spark.range(6 * 4).select(
+            (F.col("id") / 4).cast("long").alias("t"),
+            (F.col("id") % 4).alias("x"),
+            F.col("id").alias("v"),
+        ),
+        store,
+        ["t", "x"],
+    )
+    e = Engine(spark)
+    e.register_zarr("live", store, data_filter_pushdown=True)
+    sql = "SELECT t, x, v FROM live WHERE t >= 1 AND t <= 3"
+    df = e.sql(sql)
+    assert e.last_shortcut_kind == "pruned"
+    before = sorted(map(tuple, df.collect()))
+    assert [v for t, _, v in before if t == 2] == [8, 9, 10, 11]
+    update_zarr_region(
+        spark.createDataFrame(
+            [(2, x, 1000 + x) for x in range(4)], "t long, x long, v long"
+        ),
+        store,
+    )
+    assert sorted(map(tuple, df.collect())) == before
+    after = sorted(map(tuple, e.sql(sql).collect()))
+    assert [v for t, _, v in after if t == 2] == [1000, 1001, 1002, 1003]
+    assert after == sorted(map(tuple, spark.sql(sql).collect()))
+
+
+def test_pushed_filters_are_ones_spark_pushes(spark, tmp_path):
+    """The driver-side read pushes, per conjunct, only a filter Spark
+    itself pushes for it, with the same value: a spy source records
+    what Spark pushes over every integral and floating column type."""
+    import json
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.datasource import (
+        DataSource,
+        DataSourceReader,
+        InputPartition,
+    )
+
+    from zarr_datafusion_spark.stats.statement import OPS, literal, pushed_filters
+
+    out = str(tmp_path / "pushed.jsonl")
+
+    class SpyReader(DataSourceReader):
+        def __init__(self, path):
+            self.path = path
+
+        def pushFilters(self, filters):  # noqa: N802 (Spark API name)
+            with open(self.path, "a") as f:
+                for x in filters:
+                    value = repr(getattr(x, "value", None))
+                    f.write(json.dumps([type(x).__name__, x.attribute, value]))
+                    f.write("\n")
+            yield from filters
+
+        def partitions(self):
+            return [InputPartition(0)]
+
+        def read(self, partition):
+            return iter([])
+
+    class PushSpy(DataSource):
+        @classmethod
+        def name(cls):
+            return "push_spy"
+
+        def schema(self):
+            return "b byte, s short, i int, l long, f float, d double"
+
+        def reader(self, schema):
+            return SpyReader(self.options["out"])
+
+    spark.dataSource.register(PushSpy)
+    df = spark.read.format("push_spy").option("out", out).load()
+    schema = {f.name: f.dataType for f in df.schema.fields}
+    checked = 0
+    for col in schema:
+        for text in ["-300", "70000", "3000000000", "9007199254740993",
+                     "2.5", "0.1e0"]:
+            for op in (">=", "="):
+                lit = literal(text)
+                ours = [
+                    [type(f).__name__, list(f.attribute), repr(f.value)]
+                    for f in pushed_filters([(col, op, lit)], schema)
+                ]
+                if not ours:
+                    continue
+                open(out, "w").close()
+                df.filter(OPS[op](F.col(col), F.lit(lit))).collect()
+                with open(out) as f:
+                    sparks = [json.loads(line) for line in f]
+                for filt in ours:
+                    assert filt in sparks, (col, op, text, sparks)
+                checked += 1
+    assert checked >= 24
+
+
+def test_reregistration_forgets_the_old_store(spark, tmp_path):
+    """Registering a name again over another store drops what the
+    rewrites knew about the old one (its sidecar route and its
+    statistics): the answers follow the new store."""
+    from zarr_datafusion_spark.engine import Engine
+    from zarr_datafusion_spark.zarr.writer import write_store
+
+    def store(name, base):
+        return write_store(
+            str(tmp_path / name),
+            {
+                "t": (np.arange(8, dtype=np.int64), (8,)),
+                "v": (np.arange(base, base + 8, dtype=np.int64), (2,)),
+            },
+        )
+
+    e = Engine(spark)
+    e.register_zarr("w", store("a", 0), data_filter_pushdown=True)
+    e.register_zarr("w", store("b", 100))
+    for sql in [
+        "SELECT SUM(v) AS s FROM w WHERE t >= 1",
+        "SELECT MAX(v) AS m FROM w",
+    ]:
+        assert e.sql(sql).collect() == spark.sql(sql).collect(), sql
+
+
+def test_explain_analyze_runs_pruned_plans(agg_engine):
+    """Only a scan-free answer gets the "no scan" banner; a pruned
+    rewrite, top-k or a driver-read window alike, prints its real plan
+    and ``explain_analyze`` executes it with node metrics."""
+    topk = "SELECT time, lat FROM tc ORDER BY time DESC LIMIT 3"
+    out = agg_engine.explain_analyze(topk)
+    assert agg_engine.last_shortcut_kind == "pruned"
+    assert "no scan" not in out and "number of output rows" in out
+    assert "no scan" not in agg_engine.explain(topk)
+    window = "SELECT time, pressure FROM tc WHERE time = 3"
+    out = agg_engine.explain_analyze(window)
+    assert agg_engine.last_shortcut_kind == "pruned"
+    assert "no scan" not in out and "LocalTableScan" in out
+    assert "no scan" in agg_engine.explain_analyze("SELECT COUNT(*) AS n FROM tc")

@@ -1220,21 +1220,25 @@ def test_pruning_rewrites_match_full_plan_on_any_where(spark, where):
     shortcut, chunk-agg assembly, filtered-SELECT, pruned-agg): for
     any WHERE this grammar generates, Engine.sql must return the same
     rows and schema as the untouched Spark plan — a rewrite either
-    fires correctly or declines; it never reinterprets."""
+    fires correctly or declines; it never reinterprets.  The filtered
+    SELECT over this small store is read on the driver
+    (``read_zarr(filters=...)``), so its pushed filters meet every
+    literal form here too."""
     eng = _prune_engine(spark)
-    sql = (
+    agg = (
         "SELECT COUNT(*) AS n, SUM(pressure) AS s, MIN(time) AS lo, "
         f"MAX(pressure) AS hi FROM tcp WHERE {where}"
     )
-    fast = eng.sql(sql)
-    full = spark.sql(sql)
-    assert [f.name for f in fast.schema.fields] == [
-        f.name for f in full.schema.fields
-    ]
-    assert fast.collect() == full.collect(), (
-        f"rewrite drift on WHERE {where!r} "
-        f"(shortcut={eng.last_shortcut_kind!r})"
-    )
+    select = f"SELECT time, lat, lon, pressure FROM tcp WHERE {where}"
+    for sql, order in ((agg, list), (select, sorted)):
+        fast = eng.sql(sql)
+        full = spark.sql(sql)
+        assert [f.name for f in fast.schema.fields] == [
+            f.name for f in full.schema.fields
+        ]
+        assert order(map(tuple, fast.collect())) == order(
+            map(tuple, full.collect())
+        ), f"rewrite drift on {sql!r} (shortcut={eng.last_shortcut_kind!r})"
 
 
 # ---------------------------------------------------------------------------

@@ -108,6 +108,10 @@ class Engine:
         from zarr_datafusion_spark.stats.zarr_stats import zarr_table_stats
         from zarr_datafusion_spark.zarr import read_zarr
 
+        # a name registered again describes a new store: nothing the
+        # rewrites knew about the old one may answer for it
+        self._stats.pop(name, None)
+        self._chunk_agg.pop(name, None)
         if store_path.startswith("icechunk://"):
             # pin a branch/tag ref ONCE so the view, the table stats,
             # and the chunk-agg provider all answer from the SAME
@@ -300,7 +304,12 @@ class Engine:
         statistics without scanning (reference optimizer rules
         ``count_optimization.rs:37-241`` / ``minmax_optimization.rs:43-239``),
         accept the reference's ``CREATE EXTERNAL TABLE ... STORED AS
-        ZARR`` spelling, else delegate to Catalyst untouched."""
+        ZARR`` spelling, else delegate to Catalyst untouched.
+
+        An answer computed on the driver (from statistics, or a pruned
+        window below the Zarr planner's split threshold) is a snapshot
+        taken by this call; any other DataFrame reads the store when an
+        action runs."""
         from zarr_datafusion_spark.stats.statement import parse
 
         self._last_shortcut_kind = None
@@ -502,12 +511,13 @@ class Engine:
     def explain(self, query: str) -> str:
         """Physical-plan text for a SQL query (reference ``EXPLAIN`` /
         ``EXPLAIN ANALYZE``, ``docs/CLI_REFERENCE.md:455-472``).  When
-        the statistics shortcut answers the query, says so explicitly —
+        a scan-free rewrite answers the query, says so explicitly —
         the plan contains no scan, mirroring the reference's
-        ``assert_no_zarr_exec`` observable."""
+        ``assert_no_zarr_exec`` observable.  A pruned rewrite prints
+        its real plan with no banner: it reads store slabs."""
         df = self.sql(query)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        if self.last_query_used_shortcut:
+        if self.last_shortcut_kind == "scan_free":
             return (
                 "== Answered from table statistics (no scan; reference "
                 "count/minmax optimization) ==\n" + plan
@@ -521,9 +531,11 @@ class Engine:
         (``docs/CLI_REFERENCE.md:463-467``; DataFusion prints
         metrics-annotated plans the same way).  Execution drives the
         plan's own RDD, so only a row count reaches the driver; under
-        AQE the reported tree is the re-planned one actually run."""
+        AQE the reported tree is the re-planned one actually run.  Only
+        a scan-free answer skips execution; a pruned rewrite, including
+        one whose window the driver read, runs its real plan."""
         df = self.sql(query)
-        if self.last_query_used_shortcut:
+        if self.last_shortcut_kind == "scan_free":
             return (
                 "== Answered from table statistics (no scan, no execution; "
                 "reference count/minmax optimization) =="

@@ -10,7 +10,10 @@ driver's parquet tables; the Zarr source and the statistics rules live in
 Scale posture: shuffle partitions default to the local core count but are
 just a config knob — on a 1000-executor cluster the same code runs with
 ``spark.sql.shuffle.partitions`` sized to the cluster, and AQE coalesces /
-splits at runtime.  Nothing here materializes data on the driver.
+splits at runtime.  Nothing here materializes data on the driver; the
+only driver-side reads in the package are ``Engine.sql``'s driver-sized
+answers (statistics answers, and pruned windows below the Zarr
+planner's split threshold — see ``read_zarr``'s ``filters``).
 """
 
 from __future__ import annotations

@@ -14,7 +14,10 @@ scan:
   the outer coordinate is sorted) are scanned through the normal
   pruned reader, restricted to exactly those slabs;
 * the two halves combine in a one-row JVM plan (literals + a tiny
-  boundary aggregate) — no driver-side data collects.
+  boundary aggregate) — no driver-side data collects;
+* with no boundary row the driver answers alone: a one-row
+  ``LocalRelation`` (:func:`~zarr_datafusion_spark.local_relation.frame`)
+  that collects with no Spark job.
 
 Policy (same discipline as the NaN MIN/MAX withhold in
 ``data_var_bounds``):
@@ -39,32 +42,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from zarr_datafusion_spark.stats.statement import OPS, coerce, predicate
-
-
-def _classify(rmin, rmax, where, dtype):
-    """'in' (every value in ``[rmin, rmax]`` satisfies every conjunct),
-    'out' (some conjunct fails them all), or 'boundary'.  Each conjunct
-    compares in the type Spark's coercion picks for it (``coerce``), so
-    a DOUBLE literal rounds an int64 coordinate just as the scan does."""
-    if where and rmin != rmin:
-        return "boundary"  # NaN bounds: the scan decides
-    every = True
-    for _, op, lit in where or ():
-        lo, v = coerce(dtype, rmin, lit)
-        hi, _ = coerce(dtype, rmax, lit)
-        if op == "=":
-            some, all_ = lo <= v <= hi, lo == v == hi
-        else:
-            # a monotone bound holds everywhere iff it holds at the
-            # near end, somewhere iff it holds at the far end
-            near, far = (lo, hi) if op[0] == ">" else (hi, lo)
-            some, all_ = OPS[op](far, v), OPS[op](near, v)
-        if not some:
-            return "out"
-        every = every and all_
-    return "in" if every else "boundary"
+from zarr_datafusion_spark.stats.statement import classify, predicate
 
 
 def _agg_items(stmt, stats: dict, coord: str, group: str | None):
@@ -143,7 +123,7 @@ def try_chunk_agg_pushdown(
         rmin, rmax = stats["coord0_min"][r], stats["coord0_max"][r]
         if rmin is None:
             return None  # non-numeric outer coord
-        cls = _classify(rmin, rmax, where, schema.get(coord))
+        cls = classify(rmin, rmax, where, schema.get(coord))
         if cls == "in":
             interior.append(r)
         elif cls == "boundary":
@@ -181,6 +161,10 @@ def try_chunk_agg_pushdown(
         if abs(i_sum[v]) >= (1 << 63):
             return None  # the full plan raises ANSI overflow; we must too
 
+    if not boundary:
+        acc = {v: [i_sum.get(v), i_min[v], i_max[v]] for v in vars_needed}
+        return _fold_frame(spark, items, schema, [(None, i_count, acc)])
+
     # ---- boundary slab scans (only those slabs) -----------------------
     aggs = [F.count(F.lit(1)).alias("_bn")]
     for v in vars_needed:
@@ -190,38 +174,22 @@ def try_chunk_agg_pushdown(
             F.min(v).alias(f"_bmin_{v}"),
             F.max(v).alias(f"_bmax_{v}"),
         ]
-    if boundary:
-        from zarr_datafusion_spark.zarr import read_zarr
+    from zarr_datafusion_spark.zarr import read_zarr
 
-        scans = []
-        for r in boundary:
-            rmin, rmax = stats["coord0_min"][r], stats["coord0_max"][r]
-            df = read_zarr(spark, store, eager_pushdown=True)
-            c = F.col(coord)
-            scans.append(
-                df.filter(c.between(F.lit(rmin), F.lit(rmax)) & predicate(where))
-            )
-        b = scans[0]
-        for s in scans[1:]:
-            b = b.unionByName(s)
-        b = b.agg(*aggs)
-    else:
-        b = spark.range(1).select(
-            F.lit(0).cast("bigint").alias("_bn"),
-            *[
-                e
-                for v in vars_needed
-                for e in (
-                    [F.lit(None).cast("bigint").alias(f"_bsum_{v}")]
-                    if v in sum_vars
-                    else []
-                )
-                + [
-                    F.lit(None).cast("bigint").alias(f"_bmin_{v}"),
-                    F.lit(None).cast("bigint").alias(f"_bmax_{v}"),
-                ]
-            ],
+    scans = []
+    for r in boundary:
+        rmin, rmax = stats["coord0_min"][r], stats["coord0_max"][r]
+        df = read_zarr(
+            spark, store, columns=stmt.referenced(schema), eager_pushdown=True
         )
+        c = F.col(coord)
+        scans.append(
+            df.filter(c.between(F.lit(rmin), F.lit(rmax)) & predicate(where))
+        )
+    b = scans[0]
+    for s in scans[1:]:
+        b = b.unionByName(s)
+    b = b.agg(*aggs)
 
     # ---- combine: one-row JVM projection ------------------------------
     total = F.lit(i_count).cast("bigint") + F.col("_bn")
@@ -256,9 +224,50 @@ def try_chunk_agg_pushdown(
                 (F.greatest(*cols) if len(cols) > 1 else cols[0]).alias(name)
             )
     res = b.select(*out)
-    if boundary:
-        res._zds_shortcut_kind = "pruned"  # boundary slabs are read
+    res._zds_shortcut_kind = "pruned"  # boundary slabs are read
     return res
+
+
+def _fold_frame(spark, items, schema: dict, groups):
+    """The sidecar answer as a ``LocalRelation``: one row per ``(key,
+    cells, acc)`` group, ``acc`` mapping each variable to its folded
+    ``[sum, min, max]``, typed and NULLed as Spark's own aggregates
+    (COUNT is a non-null BIGINT; SUM/AVG/MIN/MAX of no cells are NULL;
+    SUM is BIGINT and AVG divides it in DOUBLE), or ``None`` when a sum
+    leaves int64: the full plan raises ANSI overflow for SUM and sums
+    AVG in DOUBLE, so the exact integer fold defers to it."""
+    from zarr_datafusion_spark.local_relation import frame
+
+    fields = []
+    for fn, arg, name in items:
+        if fn == "group":
+            fields.append(StructField(name, schema[name], nullable=False))
+        elif fn == "count":
+            fields.append(StructField(name, LongType(), nullable=False))
+        elif fn == "sum":
+            fields.append(StructField(name, LongType(), nullable=True))
+        elif fn == "avg":
+            fields.append(StructField(name, DoubleType(), nullable=True))
+        else:
+            fields.append(StructField(name, schema[arg], nullable=True))
+    columns = [[] for _ in items]
+    for key, cells, acc in groups:
+        for column, (fn, arg, _) in zip(columns, items):
+            if fn == "group":
+                value = key
+            elif fn == "count":
+                value = cells
+            elif not cells:
+                value = None
+            elif fn in ("sum", "avg"):
+                s = acc[arg][0]
+                if abs(s) >= (1 << 63):
+                    return None
+                value = s if fn == "sum" else float(s) / cells
+            else:
+                value = acc[arg][1 if fn == "min" else 2]
+            column.append(value)
+    return frame(spark, StructType(fields), columns)
 
 
 #: a grouped rollup larger than this answers from the full plan — the
@@ -279,8 +288,6 @@ def _grouped_rollup(spark, stmt, stats: dict, schema: dict, coord: str | None):
     there is no boundary scan to double-count).  The fold runs
     driver-side over metadata-sized lists; rollups beyond
     ``_ROLLUP_MAX_GROUPS`` groups bail to the distributed plan."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
     group = stmt.group
     if group != coord or stats.get("outer_chunk") != 1:
         return None
@@ -307,7 +314,7 @@ def _grouped_rollup(spark, stmt, stats: dict, schema: dict, coord: str | None):
         cv = stats["coord0_min"][r]
         if cv is None or cv != stats["coord0_max"][r]:
             return None  # non-numeric or inconsistent row bounds
-        if _classify(cv, cv, stmt.where, schema.get(coord)) != "in":
+        if classify(cv, cv, stmt.where, schema.get(coord)) != "in":
             continue
         a = acc.get(cv)
         if a is None:
@@ -325,49 +332,9 @@ def _grouped_rollup(spark, stmt, stats: dict, schema: dict, coord: str | None):
                 cur[1] = min(cur[1], v["min"][r])
                 cur[2] = max(cur[2], v["max"][r])
 
-    rows = []
-    for cv in order:
-        a = acc[cv]
-        out = []
-        for fn, arg, _ in items:
-            if fn == "group":
-                out.append(cv)
-            elif fn == "count":
-                out.append(a["cells"])
-            elif fn == "sum":
-                s = a[arg][0]
-                if abs(s) >= (1 << 63):
-                    return None  # full plan raises ANSI overflow
-                out.append(s)
-            elif fn == "avg":
-                s = a[arg][0]
-                if abs(s) >= (1 << 63):
-                    # duplicate-coord merges can push the exact Python
-                    # sum past int64 even when every per-row sum was
-                    # kept (ADVICE r10 low).  Spark's AVG(bigint) sums
-                    # in DOUBLE (verified: no ANSI overflow, unlike
-                    # SUM), so at this magnitude the full plan's
-                    # order-dependent double accumulation is the
-                    # answer of record — the exact integer fold defers
-                    # rather than risk a divergent rounding
-                    return None
-                out.append(float(s) / a["cells"])
-            elif fn == "min":
-                out.append(a[arg][1])
-            else:
-                out.append(a[arg][2])
-        rows.append(tuple(out))
-
-    fields = []
-    for fn, arg, name in items:
-        if fn == "group":
-            fields.append(StructField(name, schema[group], nullable=False))
-        elif fn == "count":
-            fields.append(StructField(name, LongType(), nullable=False))
-        elif fn == "sum":
-            fields.append(StructField(name, LongType(), nullable=True))
-        elif fn == "avg":
-            fields.append(StructField(name, DoubleType(), nullable=True))
-        else:
-            fields.append(StructField(name, schema[arg], nullable=True))
-    return spark.createDataFrame(rows, StructType(fields))
+    # duplicate-coord merges can push the exact Python sum past int64
+    # even when every per-row sum was kept (ADVICE r10 low); the fold
+    # then defers to the full plan
+    return _fold_frame(
+        spark, items, schema, [(cv, acc[cv]["cells"], acc[cv]) for cv in order]
+    )

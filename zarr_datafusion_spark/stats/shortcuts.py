@@ -21,21 +21,19 @@ discipline mirrors the reference: any deviation (a WHERE, a GROUP BY, a
 join, a non-agg item, a column without exact stats) bails to the full
 plan — correctness never depends on the shortcut.
 
-The rewritten "plan" is a one-row projection over ``spark.range(1)``
-(the analog of DataFusion's one-row ``EmptyRelation`` at
+The answer is a one-row ``LocalRelation``
+(:func:`~zarr_datafusion_spark.local_relation.frame`, the analog of
+DataFusion's one-row ``EmptyRelation`` at
 ``count_optimization.rs:311-328``): its physical plan contains no file
 scan, which tests assert the same way the reference asserts
-``assert_no_zarr_exec`` (``tests/common/mod.rs:118-124``).
+``assert_no_zarr_exec`` (``tests/common/mod.rs:118-124``), and
+collecting it runs no Spark job.
 """
 
 from __future__ import annotations
 
-import calendar
-from datetime import datetime
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampType
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def try_stats_shortcut(
@@ -54,7 +52,7 @@ def try_stats_shortcut(
     ):
         return None
 
-    cols = []
+    fields, values = [], []
     for item in stmt.items:
         fn, arg = item.fn, item.arg
         if fn == "count":
@@ -66,31 +64,19 @@ def try_stats_shortcut(
                 if arg not in stats.column_null_count or arg not in schema:
                     return None
                 value = stats.row_count - stats.column_null_count[arg]
-            col = F.lit(value).cast("bigint")
+            # the item's Spark output name and type, so shortcut and
+            # fallback schemas are identical for unaliased queries
+            fields.append(StructField(item.name, LongType(), nullable=False))
         elif fn in ("min", "max"):
             if arg not in stats.column_min_max or arg not in schema:
                 return None
             lo, hi = stats.column_min_max[arg]
             value = lo if fn == "min" else hi
-            if isinstance(schema[arg], TimestampType) and isinstance(
-                value, datetime
-            ):
-                # F.lit(naive datetime).cast(timestamp) goes through
-                # TimestampType.toInternal, which interprets naive
-                # datetimes in the driver's OS timezone — but parquet
-                # footer stats are UTC instants.  Build the literal from
-                # epoch microseconds instead (TZ-independent).
-                us = (
-                    calendar.timegm(value.utctimetuple()) * 1_000_000
-                    + value.microsecond
-                )
-                col = F.timestamp_micros(F.lit(us))
-            else:
-                col = F.lit(value).cast(schema[arg])
+            fields.append(StructField(item.name, schema[arg], nullable=True))
         else:  # a bare column, SUM or AVG
             return None
-        # the item's Spark output name, so shortcut and fallback
-        # schemas are identical for unaliased queries
-        cols.append(col.alias(item.name))
+        values.append([value])
 
-    return spark.range(1).select(*cols)
+    from zarr_datafusion_spark.local_relation import frame
+
+    return frame(spark, StructType(fields), values)

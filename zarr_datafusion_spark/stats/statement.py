@@ -21,7 +21,8 @@ compares exactly what the plain plan compares:
 * an exponent form is ``float`` (Spark's DOUBLE).
 
 :func:`coerce` puts a statistic and a literal in the type Spark's
-coercion compares them in.
+coercion compares them in, and :func:`pushed_filters` gives the
+data-source filters Spark pushes for a statement's conjuncts.
 """
 
 from __future__ import annotations
@@ -31,8 +32,23 @@ import re
 from dataclasses import dataclass
 from decimal import Decimal
 
+import numpy as np
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, FloatType
+from pyspark.sql.datasource import (
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    LessThan,
+    LessThanOrEqual,
+)
+from pyspark.sql.types import (
+    ByteType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+)
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 _NUM = r"[-+]?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?"
@@ -113,6 +129,19 @@ class Statement:
             return None
         return [i.arg for i in self.items]
 
+    def referenced(self, schema) -> list[str]:
+        """The ``schema`` columns the statement names anywhere (select
+        items and aggregate arguments, conjuncts, GROUP BY and ORDER BY
+        keys), in table order; all of them under ``SELECT *``.  A
+        rewrite's fresh relation reads only these."""
+        if any(i.fn is None and i.arg == "*" for i in self.items):
+            return list(schema)
+        names = {i.arg for i in self.items}
+        names.update(c for c, _, _ in self.where or ())
+        names.update(c for c, _ in self.order)
+        names.add(self.group)
+        return [c for c in schema if c in names]
+
 
 def literal(text: str):
     """Type a numeric literal as Spark SQL does (see the module doc)."""
@@ -133,12 +162,87 @@ def coerce(dtype, value, lit) -> tuple:
     return value, lit
 
 
+def classify(rmin, rmax, where, dtype):
+    """How the values ``[rmin, rmax]`` of a ``dtype`` column (a chunk
+    row's sidecar bounds) meet ``where``'s conjuncts on it: 'in' (every
+    value satisfies every conjunct), 'out' (some conjunct fails them
+    all), or 'boundary'.  Each conjunct
+    compares in the type Spark's coercion picks for it (``coerce``), so
+    a DOUBLE literal rounds an int64 coordinate just as the scan does."""
+    if where and rmin != rmin:
+        return "boundary"  # NaN bounds: the scan decides
+    every = True
+    for _, op, lit in where or ():
+        lo, v = coerce(dtype, rmin, lit)
+        hi, _ = coerce(dtype, rmax, lit)
+        if op == "=":
+            some, all_ = lo <= v <= hi, lo == v == hi
+        else:
+            # a monotone bound holds everywhere iff it holds at the
+            # near end, somewhere iff it holds at the far end
+            near, far = (lo, hi) if op[0] == ">" else (hi, lo)
+            some, all_ = OPS[op](far, v), OPS[op](near, v)
+        if not some:
+            return "out"
+        every = every and all_
+    return "in" if every else "boundary"
+
+
 def predicate(conjuncts):
     """The Spark Column AND-ing ``conjuncts``."""
     pred = F.lit(True)
     for col, op, lit in conjuncts:
         pred = pred & OPS[op](F.col(col), F.lit(lit))
     return pred
+
+
+#: data-source filter class per comparison operator
+_FILTERS = {
+    ">": GreaterThan,
+    ">=": GreaterThanOrEqual,
+    "<": LessThan,
+    "<=": LessThanOrEqual,
+    "=": EqualTo,
+}
+
+#: bits of each integral Spark type
+_INT_BITS = {ByteType: 8, ShortType: 16, IntegerType: 32, LongType: 64}
+
+
+def _pushed_value(dtype, lit):
+    """The value Spark pushes to a data source for ``column <op> lit``
+    over a ``dtype`` column, or ``None`` where this rule does not know
+    it for certain.
+
+    Known: an integer literal within an integral column's range, pushed
+    as itself, and a literal exactly representable in a floating
+    column's type, pushed as that float.  Elsewhere Spark's optimizer
+    may rewrite the bound first (``l > 2.5`` pushes ``l > 2``,
+    ``f > 0.1`` pushes ``f >= 0.10000000149``) or push nothing."""
+    if type(dtype) in _INT_BITS:
+        half = 1 << (_INT_BITS[type(dtype)] - 1)
+        return lit if type(lit) is int and -half <= lit < half else None
+    if not isinstance(dtype, (FloatType, DoubleType)):
+        return None
+    x = float(lit)  # an int64 or Decimal never raises, at worst inf
+    if not np.isfinite(x) or (x != lit if type(lit) is int else Decimal(x) != lit):
+        return None
+    if isinstance(dtype, FloatType) and float(np.float32(x)) != x:
+        return None
+    return x
+
+
+def pushed_filters(conjuncts, schema: dict) -> list:
+    """Data-source filters for ``conjuncts``: each one Spark itself
+    pushes for them, with the same value, where :func:`_pushed_value`
+    knows it.  A subset is safe under the Inexact contract, since the
+    full predicate is re-applied; it only reads more."""
+    out = []
+    for col, op, lit in conjuncts:
+        value = _pushed_value(schema.get(col), lit)
+        if value is not None:
+            out.append(_FILTERS[op]((col,), value))
+    return out
 
 
 def _conjuncts(where: str):

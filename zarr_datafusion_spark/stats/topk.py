@@ -84,7 +84,9 @@ def try_topk_pushdown(
 
     from zarr_datafusion_spark.zarr import read_zarr
 
-    df = read_zarr(spark, store, eager_pushdown=True)
+    df = read_zarr(
+        spark, store, columns=stmt.referenced(schema), eager_pushdown=True
+    )
     c = F.col(coord)
     df = df.filter(c >= F.lit(threshold) if desc else c <= F.lit(threshold))
     order_cols = [

@@ -9,7 +9,9 @@ Source API (Spark >= 4.0):
   reference scan is single-partition/single-batch (``zarr_exec.rs:100``,
   a documented limitation); partition-per-slab gives a genuinely
   parallel scan that holds at 100 TB — each task reads only its slab,
-  nothing is materialized on the driver.
+  nothing is materialized on the driver.  The one exception is
+  ``read_zarr(filters=...)``, which the driver reads itself only for a
+  pruned window below the planner's split threshold.
 * coordinate-equality filter pushdown (``src/reader/filter.rs:70-302``)
   -> ``pushFilters``: ``coord = literal`` conjuncts shrink the
   per-dimension read windows (chunk pruning); ALL filters are returned
@@ -1022,6 +1024,7 @@ def read_zarr(
     fill_value_nulls: bool = False,
     chunk_cache_mb: int = 0,
     prefetch: int = 0,
+    filters: list[Filter] | None = None,
 ) -> DataFrame:
     """Flattened DataFrame over a Zarr store (engine API analog of the
     reference's ``register_table`` example path, EP2).
@@ -1072,6 +1075,19 @@ def read_zarr(
     ``README.md:326``) — pays on latency-bound remote stores; local
     scans usually prefer the default sequential reads (the chunks of
     one window are adjacent on disk).
+
+    ``filters``: data-source filters the caller re-applies to the
+    result, a subset of those Spark pushes for its predicate (the
+    Inexact contract: pushing fewer only reads more).  With them the
+    driver plans the read here, as Spark's Python workers would: the
+    source's own ``schema()``, ``pushFilters(filters)`` and
+    ``partitions()``.  When the planned window holds fewer than
+    ``ZarrDataSourceReader.MIN_PARTITION_ROWS`` rows, the size below
+    which the planner makes one partition at any parallelism, the
+    driver also runs the reader's ``read()`` (``stats_dir`` accounting
+    included) and returns the rows as a ``LocalRelation``: a snapshot
+    taken now, which collects with no Spark job and no Python worker.
+    A bigger window returns the usual distributed relation.
     """
     if store_path.startswith("icechunk://"):
         # pin a mutable branch ref to its snapshot id NOW, so the plan
@@ -1082,9 +1098,9 @@ def read_zarr(
 
         store_path = pin_snapshot(store_path)
     register_zarr_source(spark)
-    reader = spark.read.format("zarr")
+    options = {}
     if eager_pushdown:
-        reader = reader.option("filter_pushdown", "eager")
+        options["filter_pushdown"] = "eager"
     if data_filter_pushdown:
         if not eager_pushdown:
             raise ValueError(
@@ -1099,25 +1115,56 @@ def read_zarr(
         sidecar = chunk_stats_sidecar_path(store_path)
         if sidecar is not None:
             compute_zarr_chunk_stats(spark, store_path)  # builds sidecar
-            reader = reader.option("data_stats_path", sidecar)
+            options["data_stats_path"] = sidecar
     if fill_value_nulls:
-        reader = reader.option("fill_value_nulls", "true")
+        options["fill_value_nulls"] = "true"
     if chunk_cache_mb:
-        reader = reader.option("chunk_cache_mb", str(int(chunk_cache_mb)))
+        options["chunk_cache_mb"] = str(int(chunk_cache_mb))
     if prefetch:
-        reader = reader.option("prefetch", str(int(prefetch)))
+        options["prefetch"] = str(int(prefetch))
     if columns:
-        reader = reader.option("columns", ",".join(columns))
+        options["columns"] = ",".join(columns)
     if limit is not None:
-        reader = reader.option("limit", str(limit))
+        options["limit"] = str(limit)
     if target_batch_rows is not None:
-        reader = reader.option("target_batch_rows", str(target_batch_rows))
+        options["target_batch_rows"] = str(target_batch_rows)
     if stats_dir is not None:
-        reader = reader.option("stats_dir", stats_dir)
+        options["stats_dir"] = stats_dir
     if target_partitions is None:
         target_partitions = spark.sparkContext.defaultParallelism
-    reader = reader.option("target_partitions", str(target_partitions))
-    return reader.load(store_path)
+    options["target_partitions"] = str(target_partitions)
+    if filters is not None:
+        local = _read_on_driver(spark, {**options, "path": store_path}, filters)
+        if local is not None:
+            return local
+    return spark.read.format("zarr").options(**options).load(store_path)
+
+
+def _read_on_driver(
+    spark: SparkSession, options: dict, filters: list[Filter]
+) -> DataFrame | None:
+    """The ``read_zarr(filters=...)`` window read on the driver, or
+    ``None`` when it plans at or above the split threshold."""
+    from zarr_datafusion_spark.local_relation import frame
+
+    source = ZarrDataSource(options)
+    schema = source.schema()
+    reader = source.reader(schema)
+    list(reader.pushFilters(list(filters)))  # a generator: run it
+    parts = reader.partitions()
+    rows = sum(
+        (p.outer_hi - p.outer_lo)
+        * int(np.prod([hi - lo for lo, hi in p.inner_windows]))
+        for p in parts
+    )
+    if rows >= reader.MIN_PARTITION_ROWS:
+        return None
+    batches = [b for p in parts for b in reader.read(p)]
+    columns = [
+        pa.chunked_array([b.column(i) for b in batches]) if batches else []
+        for i in range(len(schema.fields))
+    ]
+    return frame(spark, schema, columns)
 
 
 def read_zarr_stream(
