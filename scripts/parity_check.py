@@ -1,14 +1,16 @@
 """Spot parity check: run named registry entries against their DuckDB
-oracles at one or more SFs, value-exact (the verify-recipe norm).
+oracles at one or more SFs, value-exact
+(``zarr_datafusion_spark.parity.assert_frames_match``, the tests' own
+comparison).
 
 Usage::
 
     python scripts/parity_check.py q1,q2[,...] [sf0.001 sf0.01]
+    python scripts/parity_check.py all sf0.01
 
-Exit code 1 on any mismatch.  Used by the r14 optimization round to
-prove every touched entry still matches its oracle bit-for-bit before
-its change is kept (the "prove equivalence with the oracle before
-moving on" rule).
+``all`` runs every oracle-backed entry.  The session comes from
+``session.get_spark``, so ``SPARK_GRAFT_CPUS`` sets the parallelism as
+it does for the tests and the sweep.  Exit code 1 on any mismatch.
 """
 
 from __future__ import annotations
@@ -19,66 +21,23 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
-import numpy as np  # noqa: E402
-import pandas as pd  # noqa: E402
 
 import __spark_entry__ as E  # noqa: E402
-from zarr_datafusion_spark.session import TABLES  # noqa: E402
-
-
-def norm(df):
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].dt.floor("us")
-        elif df[c].dtype == object and len(df) and len(df[c].dropna()):
-            v = df[c].dropna().iloc[0]
-            if type(v).__name__ == "Decimal":
-                df[c] = df[c].astype(float)
-            elif type(v).__name__ == "date":
-                df[c] = pd.to_datetime(df[c])
-    if not len(df):
-        return df
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(
-        drop=True
-    )
-
-
-def frames_equal(l, r) -> bool:
-    if len(l) != len(r) or list(l.columns) != list(r.columns):
-        return False
-    for c in l.columns:
-        lv, rv = l[c], r[c]
-        if pd.api.types.is_float_dtype(lv) or pd.api.types.is_float_dtype(rv):
-            lv = lv.astype(float).to_numpy()
-            rv = rv.astype(float).to_numpy()
-            if not (((lv == rv) | (np.isnan(lv) & np.isnan(rv))).all()):
-                return False
-        else:
-            if not (
-                (lv.isna() == rv.isna()).all()
-                and (lv[~lv.isna()] == rv[~rv.isna()]).all()
-            ):
-                return False
-    return True
+from zarr_datafusion_spark.parity import assert_frames_match  # noqa: E402
+from zarr_datafusion_spark.session import TABLES, get_spark  # noqa: E402
 
 
 def main() -> None:
-    names = [q.strip() for q in sys.argv[1].split(",") if q.strip()]
+    qs, os_ = E.queries(), E.oracle_sql()
+    if sys.argv[1] == "all":
+        names = sorted(os_)
+    else:
+        names = [q.strip() for q in sys.argv[1].split(",") if q.strip()]
     sfs = sys.argv[2:] or ["sf0.001", "sf0.01"]
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("parity-check")
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs, os_ = E.queries(), E.oracle_sql()
     bad = []
     for sf in sfs:
         sf_dir = f"/root/testdata/{sf}"
@@ -90,11 +49,11 @@ def main() -> None:
                     f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
                 )
         for name in names:
-            l = norm(qs[name](spark, sf_dir).toPandas())
-            r = norm(con.sql(os_[name]).df())
-            ok = frames_equal(l, r)
-            print(f"  {sf} {name}: {'OK' if ok else 'MISMATCH'} ({len(l)} rows)")
-            if not ok:
+            try:
+                assert_frames_match(qs[name](spark, sf_dir), con.sql(os_[name]))
+                print(f"  {sf} {name}: OK")
+            except AssertionError as e:
+                print(f"  {sf} {name}: MISMATCH ({e})")
                 bad.append((sf, name))
     print("FAILS:", bad or "none")
     sys.exit(1 if bad else 0)

@@ -6,7 +6,7 @@ repetition-signal per-doc quadratic (19 s) in non-headline-stressed
 paths.  Run it after adding an operator, before calling it done:
 
     python scripts/make_sf1.py          # once, generates data/sf1
-    python scripts/sf1_sweep.py         # ~4 min at r6 state
+    python scripts/sf1_sweep.py 2>&1 | tee /tmp/sf1_sweep.log   # ~4 min at r6 state
 
 Failures print as ERROR rows; the slowest entries print last — anything
 disproportionate to its data volume deserves a plan look (EXPLAIN

@@ -1,6 +1,7 @@
 """Shared fixtures: one SparkSession per test session + the DuckDB
-differential-oracle harness (mirrors the driver's compare: row count,
-column names, order-insensitive values)."""
+differential-oracle harness (``assert_frames_match``, re-exported from
+``zarr_datafusion_spark.parity``: row count, column names,
+order-insensitive values)."""
 
 from __future__ import annotations
 
@@ -8,11 +9,11 @@ import os
 import sys
 
 import duckdb
-import numpy as np
-import pandas as pd
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from zarr_datafusion_spark.parity import assert_frames_match  # noqa: E402,F401
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -170,6 +171,7 @@ if not hasattr(_REG, "gcs_key_file"):
 
 GCS_TEST_KEY_FILE = _REG.gcs_key_file
 GCS_TEST_PUBKEY = _REG.gcs_pubkey
+
 TABLES = (
     "region",
     "nation",
@@ -237,80 +239,3 @@ def jobs_launched(spark, fn) -> tuple:
             sc.setLocalProperty(k, v)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return result, sorted(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    """Sort columns by name and rows by all values (driver compare is
-    order-insensitive); normalize timestamps to us precision."""
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].dt.floor("us").dt.tz_localize(None) if getattr(df[c].dt, "tz", None) else df[c].dt.floor("us")
-        # decimal.Decimal values from either engine -> float for compare
-        # (sniff the first NON-NULL value: a None in row 0 must not
-        # leave a Decimal/None object column to crash the sort)
-        elif df[c].dtype == object and df[c].notna().any() and type(
-            df[c].dropna().iloc[0]
-        ).__name__ == "Decimal":
-            df[c] = df[c].astype(float)
-    if len(df):
-        df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
-    return df
-
-
-def assert_frames_match(spark_df, duck_rel, *, float_exact: bool = True):
-    """Differential assertion: Spark result ≡ DuckDB result.
-
-    ``float_exact=True`` is the default because the query suite is
-    engineered for bit determinism (exact decimal sums); queries that
-    cannot be (documented per-case) pass ``float_exact=False`` for a
-    1e-9 relative tolerance.
-    """
-    left = _normalize(spark_df.toPandas())
-    # DuckDB-declared column types: HUGEINT (e.g. SUM(INTEGER)) arrives
-    # in pandas as float64, and the round-2 driver record shows it is
-    # hashed as float there too (text_lang_distribution /
-    # split_train_valid_test / pipeline_curate all hash-mismatched on
-    # an integer SUM).  Oracles must CAST(SUM(..) AS BIGINT); the
-    # harness therefore flags HUGEINT alongside declared floats.
-    duck_float_cols = {
-        c
-        for c, t in zip(duck_rel.columns, duck_rel.types)
-        if str(t) in ("FLOAT", "DOUBLE", "REAL", "HUGEINT")
-    }
-    right = _normalize(duck_rel.df())
-
-    assert len(left) == len(right), f"row count {len(left)} != {len(right)}"
-    assert list(left.columns) == list(right.columns), (
-        f"columns {list(left.columns)} != {list(right.columns)}"
-    )
-    for c in left.columns:
-        lv, rv = left[c], right[c]
-        # The driver hashes TYPED values: an int column on one side and a
-        # float on the other hash-mismatches even when numerically equal
-        # (round-1 scalar_functions failure: Spark floor()->BIGINT vs
-        # DuckDB floor()->DOUBLE).  Only enforceable when neither side has
-        # nulls (pandas promotes nullable ints to float64 on both sides),
-        # and only against declared-float-or-HUGEINT oracle columns
-        # (duck_float_cols above — both classes hash as float at the
-        # driver).
-        if not lv.isna().any() and not rv.isna().any():
-            li, ri = pd.api.types.is_integer_dtype(lv), pd.api.types.is_integer_dtype(rv)
-            lf, rf = pd.api.types.is_float_dtype(lv), pd.api.types.is_float_dtype(rv)
-            assert not (li and rf and c in duck_float_cols) and not (lf and ri), (
-                f"column {c}: dtype class mismatch {lv.dtype} vs {rv.dtype} "
-                "(driver value-hash is type-sensitive)"
-            )
-        if pd.api.types.is_float_dtype(lv) or pd.api.types.is_float_dtype(rv):
-            lv = lv.astype(float).to_numpy()
-            rv = rv.astype(float).to_numpy()
-            both_nan = np.isnan(lv) & np.isnan(rv)
-            if float_exact:
-                ok = (lv == rv) | both_nan
-            else:
-                ok = np.isclose(lv, rv, rtol=1e-9, atol=1e-12) | both_nan
-            assert ok.all(), f"column {c}: first mismatch at {np.argmin(ok)}: {lv[np.argmin(ok)]} != {rv[np.argmin(ok)]}"
-        else:
-            lvn = lv.isna()
-            rvn = rv.isna()
-            assert (lvn == rvn).all() and (lv[~lvn] == rv[~rvn]).all(), f"column {c} differs"

@@ -17,6 +17,8 @@ import json
 import os
 import time
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -1757,27 +1759,46 @@ def test_branch_creation_fence_raises_when_rival_snapshot_gced(repo):
 # ---------------------------------------------------------------------------
 
 
-def _probe_mod():
-    """The probe script IS the single source of the base arrays and
-    slab builder — importing it here keeps the BASELINE.md table and
-    these assertions in lockstep (r13 review: the helpers had been
-    duplicated)."""
-    import importlib.util
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(here, "scripts", "append_scale_probe.py")
-    spec = importlib.util.spec_from_file_location("append_scale_probe", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+NLAT, NLON = 10, 14  # distinct sizes: dimension-order inference needs them
 
 
-def _probe_base_arrays(n_slabs: int):
-    return _probe_mod().probe_base_arrays(n_slabs)
+def _probe_base_arrays(n_slabs: int) -> dict:
+    """A base store of ``n_slabs`` one-slab chunks of two data
+    variables over (time, lat, lon)."""
+    rng = np.random.RandomState(7)
+    return {
+        "time": (np.arange(n_slabs, dtype=np.int64), (n_slabs,)),
+        "lat": (np.arange(NLAT, dtype=np.int64), (NLAT,)),
+        "lon": (np.arange(NLON, dtype=np.int64), (NLON,)),
+        "temperature": (
+            rng.randn(n_slabs, NLAT, NLON).astype(np.float64),
+            (1, NLAT, NLON),
+        ),
+        "humidity": (
+            rng.rand(n_slabs, NLAT, NLON).astype(np.float64),
+            (1, NLAT, NLON),
+        ),
+    }
 
 
 def _probe_slab_df(spark, t: int):
-    return _probe_mod().one_slab_df(spark, t)
+    """One new outer slab at ``time == t``, as a Spark DataFrame."""
+    lat, lon = np.meshgrid(
+        np.arange(NLAT, dtype=np.int64),
+        np.arange(NLON, dtype=np.int64),
+        indexing="ij",
+    )
+    rng = np.random.RandomState(1000 + t)
+    pdf = pd.DataFrame(
+        {
+            "time": np.full(NLAT * NLON, t, dtype=np.int64),
+            "lat": lat.ravel(),
+            "lon": lon.ravel(),
+            "temperature": rng.randn(NLAT * NLON),
+            "humidity": rng.rand(NLAT * NLON),
+        }
+    )
+    return spark.createDataFrame(pdf)
 
 
 def test_append_staging_is_sparse_at_any_store_size(spark, tmp_path):
@@ -1786,7 +1807,7 @@ def test_append_staging_is_sparse_at_any_store_size(spark, tmp_path):
     chunk — whether the base repo holds 13, 103, or 303 chunk objects:
     the sparse staging + ``_base_manifest`` merge never touches (or
     re-stages) existing data chunks (VERDICT r12 item 5; wall-time
-    table: scripts/append_scale_probe.py + BASELINE.md r13)."""
+    table: BASELINE.md r13)."""
     from zarr_datafusion_spark.zarr.icechunk import append_snapshot
     from zarr_datafusion_spark.zarr.writer import write_store
 

@@ -350,7 +350,7 @@ def test_lsh_band_exchange_is_packed_bigints(spark):
     banding exchange must key on the two packed BIGINTs, never the
     comma-joined string (array_join) key — and the r15 adjudication
     confirmed the packed explode-then-project shape is the fastest of
-    the three candidates at sf0.1 AND sf1 (scripts/lsh_adjudicate_r15.py)."""
+    the three candidates at sf0.1 AND sf1 (OPTIMIZATION_r15.md)."""
     from zarr_datafusion_spark.operators.dedup import QUERIES
 
     plan = plan_text(QUERIES["dedup_minhash_lsh"](spark, SF_DIR))

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import os
 import re
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -577,11 +576,3 @@ class Engine:
 
         walk(plan, 0)
         return "\n".join(lines)
-
-    def timed_sql(self, query: str) -> tuple[DataFrame, float]:
-        """Convenience: (result, seconds) like the REPL timing line
-        (``src/bin/zarr_cli/main.rs:253``)."""
-        t0 = time.perf_counter()
-        df = self.sql(query)
-        df.count()  # force execution
-        return df, time.perf_counter() - t0

@@ -621,7 +621,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     codegen), and at sf1's ~23M label-blocked pairs that interpretation
     dominated the entry: same-JVM rotating best-of-3 measured the fold
     join at 11.2 s vs 2.4 s for this shape (the unrolled 64-term
-    codegen sum was 12x WORSE at 139 s — `scripts/cos_shape_ab.py`).
+    codegen sum was 12x WORSE at 139 s — OPTIMIZATION_r14.md).
     Only pairs above a conservative margin (raw dot >= t - 1e-6)
     return across the boundary; Spark applies the exact HALF_UP
     ``round(dot, 6) >= t`` — numpy's half-to-even round is never used,
