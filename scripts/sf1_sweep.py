@@ -30,18 +30,6 @@ def main() -> None:
         "SPARK_GRAFT_SWEEP_SF_DIR",
         os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "data", "sf1"),
     )
-    # keep the tee'd log parseable: the \r console-progress frames
-    # interleave with per-entry lines and break line-oriented greps
-    # (r14: a progress frame glued to an entry line mis-read as a
-    # second timing).  Static conf, read at JVM launch — post-hoc
-    # spark.conf.set is a silent no-op for it, and SparkSession.builder
-    # returns a FRESH builder per access, so the only hook that reaches
-    # get_spark's own builder is the submit-args env (read once at
-    # context creation; appending preserves any caller-set value).
-    prev_args = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
-    os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        "--conf spark.ui.showConsoleProgress=false " + prev_args
-    )
     spark = get_spark("sf1-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     print(

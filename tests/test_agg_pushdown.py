@@ -851,6 +851,50 @@ def test_driver_read_answer_is_a_snapshot(spark, tmp_path):
     assert after == sorted(map(tuple, spark.sql(sql).collect()))
 
 
+def test_region_update_refreshes_statistics_answers(spark, tmp_path):
+    """After an in-place region update, every statistics route answers
+    for the new data: the scan-free data-variable MAX, the chunk-level
+    filtered COUNT/SUM, and the data-var-pruned SELECT all equal Spark
+    over the updated store, although each route already answered (and
+    cached) for the old data in the same process."""
+    from pyspark.sql import functions as F
+
+    from zarr_datafusion_spark.engine import Engine
+    from zarr_datafusion_spark.zarr.sink import update_zarr_region, write_zarr
+
+    store = str(tmp_path / "upd.zarr")
+    write_zarr(
+        spark.range(6 * 4).select(
+            (F.col("id") / 4).cast("long").alias("t"),
+            (F.col("id") % 4).alias("x"),
+            F.col("id").alias("v"),
+        ),
+        store,
+        ["t", "x"],
+    )
+    e = Engine(spark)
+    e.register_zarr("upd", store, data_filter_pushdown=True)
+    queries = [
+        "SELECT MAX(v) AS hi FROM upd",
+        "SELECT COUNT(*) AS n, SUM(v) AS s FROM upd WHERE t >= 1",
+        "SELECT t, x, v FROM upd WHERE v >= 1000",
+    ]
+    for q in queries:
+        e.sql(q).collect()
+    assert e.sql(queries[0]).collect()[0].hi == 23
+    update_zarr_region(
+        spark.createDataFrame(
+            [(2, x, 1000 + x) for x in range(4)], "t long, x long, v long"
+        ),
+        store,
+    )
+    for q in queries:
+        got = sorted(map(tuple, e.sql(q).collect()))
+        assert got == sorted(map(tuple, spark.sql(q).collect())), q
+    assert e.sql(queries[0]).collect()[0].hi == 1003
+    assert e.last_shortcut_kind == "scan_free"
+
+
 def test_pushed_filters_are_ones_spark_pushes(spark, tmp_path):
     """The driver-side read pushes, per conjunct, only a filter Spark
     itself pushes for it, with the same value: a spy source records

@@ -109,29 +109,20 @@ def test_storage_parse_errors():
         StorageLocation.parse("ftp://host/x")
 
 
-def test_remote_store_fallback_without_fsspec():
-    """Without fsspec installed, s3:// and gs:// dispatch to the
-    stdlib public-bucket adapters instead of failing (r7 — the r6 gate
-    raised NotImplementedError here; both schemes now execute live,
-    see test_s3_store_schema_and_scan / test_gcs_store_adapter_live)."""
-    try:
-        import fsspec  # noqa: F401
+def test_remote_stores_dispatch_to_object_store_adapters():
+    """s3://, gs:// and az:// dispatch to their stdlib object-store
+    adapters (the live-server tests in test_zarr_source.py execute
+    them), and a write resolves to the same cached adapter as a read."""
+    from zarr_datafusion_spark.zarr import storage as st
 
-        pytest.skip("fsspec installed: the fallback does not apply")
-    except ImportError:
-        pass
-    from zarr_datafusion_spark.zarr.storage import (
-        GcsHttpStoreFS,
-        S3HttpStoreFS,
-        store_fs,
-    )
-
-    fs, root = store_fs("s3://bucket/store.zarr")
-    assert isinstance(fs, S3HttpStoreFS)
-    assert root == "s3://bucket/store.zarr"
-    fs, root = store_fs("gs://bucket/store.zarr")
-    assert isinstance(fs, GcsHttpStoreFS)
-    assert root == "gs://bucket/store.zarr"
+    for url, cls in (
+        ("s3://bucket/store.zarr", st.S3HttpStoreFS),
+        ("gs://bucket/store.zarr", st.GcsHttpStoreFS),
+        ("az://bucket/store.zarr", st.AzureHttpStoreFS),
+    ):
+        fs, root = st.store_fs(url)
+        assert isinstance(fs, cls) and root == url
+        assert st.writable_store_fs(url) is st.store_fs(url)
 
 
 def test_storage_parse_http():

@@ -22,6 +22,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from zarr_datafusion_spark.zarr import storage as st
 from zarr_datafusion_spark.zarr.icechunk import (
     IcechunkConflictError,
     IcechunkStoreFS,
@@ -1385,14 +1386,14 @@ def s3_repo():
     from tests.conftest import S3_TEST_SOCK
 
     srv, objects, _ep = _writable_s3_server("icbucket", sock=S3_TEST_SOCK)
-    ic._writer_cache().clear()
+    st._ADAPTER_CACHE.clear()
     ic._COND_PUT_OK.clear()
     try:
         yield "s3://icbucket/repo.ic", objects
     finally:
         # shutdown only — the socket stays bound for later fixtures
         srv.shutdown()
-        ic._writer_cache().clear()
+        st._ADAPTER_CACHE.clear()
         ic._COND_PUT_OK.clear()
 
 
@@ -1479,7 +1480,7 @@ def test_remote_commit_refuses_precondition_ignoring_store(monkeypatch, spark):
 
     srv, _objects, ep = _writable_s3_server("badbucket", honor_condition=False)
     monkeypatch.setenv("AWS_ENDPOINT_URL_S3", ep)
-    ic._writer_cache().clear()
+    st._ADAPTER_CACHE.clear()
     ic._COND_PUT_OK.clear()
     try:
         with pytest.raises(NotImplementedError, match="conditional"):
@@ -1488,18 +1489,15 @@ def test_remote_commit_refuses_precondition_ignoring_store(monkeypatch, spark):
             )
     finally:
         srv.shutdown()
-        ic._writer_cache().clear()
+        st._ADAPTER_CACHE.clear()
         ic._COND_PUT_OK.clear()
 
 
 def test_remote_commit_refuses_http_backend(monkeypatch):
     """Plain http(s):// has no atomic create — the writer resolution
     must refuse loudly, not fall back to last-writer-wins."""
-    import zarr_datafusion_spark.zarr.icechunk as ic
-
-    ic._writer_cache().clear()
     with pytest.raises(NotImplementedError, match="atomic conditional"):
-        ic._repo_writer("http://127.0.0.1:1/repo.ic")
+        st.writable_store_fs("http://127.0.0.1:1/repo.ic")
 
 
 def test_remote_gc_collects_lost_race_debris(spark, s3_repo, monkeypatch, tmp_path):

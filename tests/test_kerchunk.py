@@ -342,6 +342,32 @@ def test_http_range_ignored_falls_back_client_side(tmp_path, range_server):
         srv.server_close()
 
 
+def test_object_store_targets_read_through_adapters(tmp_path, monkeypatch):
+    """An s3:// payload target is read by the same object-store adapter
+    as an s3:// store — whole-file and byte-range refs alike (this
+    server ignores Range, so the range is sliced client-side)."""
+    from tests.test_icechunk import _writable_s3_server
+    from zarr_datafusion_spark.zarr import storage as st
+
+    blob = bytes(range(97)) * 3
+    srv, objects, ep = _writable_s3_server("kbucket")
+    objects["arc.bin"] = blob
+    monkeypatch.setenv("AWS_ENDPOINT_URL_S3", ep)
+    st._ADAPTER_CACHE.clear()
+    try:
+        refs = write_references(
+            str(tmp_path / "s3.json"),
+            {"whole": ["s3://kbucket/arc.bin"], "r": ["s3://kbucket/arc.bin", 100, 50]},
+        )
+        fs = ReferenceStoreFS(refs)
+        assert fs.read_bytes("whole") == blob
+        assert fs.read_bytes("r") == blob[100:150]
+    finally:
+        srv.shutdown()
+        srv.server_close()
+        st._ADAPTER_CACHE.clear()
+
+
 # ---------------------------------------------------------------------------
 # Engine + read-only guards
 # ---------------------------------------------------------------------------

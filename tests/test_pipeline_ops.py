@@ -613,7 +613,7 @@ def test_embedding_cosine_chunk_pairs_match_single_block(
         )
 
     single = run()  # default chunk size: every block is one chunk
-    monkeypatch.setenv("SPARK_GRAFT_COS_CHUNK_ROWS", "8")
+    monkeypatch.setattr(dedup, "COS_CHUNK_ROWS", 8)
     chunked = run()
     assert len(chunked) == len(single) > 0
     for c in ("vec_a", "vec_b", "label"):

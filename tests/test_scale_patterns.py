@@ -272,3 +272,11 @@ def test_salted_join_equals_plain_join(spark):
     # exceptAll is multiset difference: both directions empty => equal
     assert salted.exceptAll(plain).count() == 0
     assert plain.exceptAll(salted).count() == 0
+
+
+def test_session_hides_console_progress(spark):
+    """The session never draws console progress bars: their
+    ``\r[Stage N:>...]`` frames would land in the stdout of every
+    script that prints per-entry result lines."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.ui.showConsoleProgress") == "false"

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -80,11 +80,11 @@ class Engine:
         """Register a Zarr store as a queryable table (reference
         ``CREATE EXTERNAL TABLE ... STORED AS ZARR``, ``src/datasource/factory.rs:19-65``).
 
-        ``data_filter_pushdown=True`` additionally computes (once,
-        distributed, sidecar-cached) per-chunk-row min/max for the
-        data variables and folds them into the table statistics, so
-        the A8 rewrite answers data-variable MIN/MAX scan-free — the
-        registration-time half of VERDICT r8 item 3.
+        ``data_filter_pushdown=True`` additionally computes (once per
+        store version, distributed, sidecar-cached) per-chunk-row
+        statistics for the data variables; ``sql`` folds them into
+        global bounds per statement, so the A8 rewrite answers
+        data-variable MIN/MAX scan-free (VERDICT r8 item 3).
 
         The VIEW itself is always registered in the safe (lazy)
         pushdown mode: eager window narrowing bakes the narrowed
@@ -132,27 +132,45 @@ class Engine:
         except Exception:
             pass
         if data_filter_pushdown and name in self._stats:
-            # fold the chunk-row stats to global data-var bounds so the
-            # A8 MIN/MAX→constant rewrite answers data-variable queries
-            # scan-free too (the reference's stats stop at coordinates,
-            # zarr.rs:191-254); NaN-containing floats are withheld —
-            # see stats.chunk_stats.data_var_bounds
+            # build the chunk-row stats now, and enable chunk-level
+            # SUM/AVG/COUNT pushdown and data-variable MIN/MAX
+            # (reference README.md:297, unchecked roadmap item)
             try:
                 from zarr_datafusion_spark.stats.chunk_stats import (
                     compute_zarr_chunk_stats,
-                    data_var_bounds,
                 )
 
-                bounds = data_var_bounds(
-                    compute_zarr_chunk_stats(self.spark, store_path)
-                )
-                self._stats[name].column_min_max.update(bounds)
-                # and enable chunk-level SUM/AVG/COUNT pushdown
-                # (reference README.md:297, unchecked roadmap item)
+                compute_zarr_chunk_stats(self.spark, store_path)
                 self._chunk_agg[name] = store_path
             except Exception:
                 pass
         return df
+
+    def _with_var_bounds(self, stmt, stats: TableStats | None) -> TableStats | None:
+        """``stats`` plus the global bounds of the data variables that
+        ``stmt``'s MIN/MAX items name, folded from the chunk-row stats
+        at statement time, so the A8 MIN/MAX→constant rewrite answers
+        data-variable queries scan-free too (the reference's stats stop
+        at coordinates, zarr.rs:191-254) and an in-place update, which
+        re-keys the stats sidecar, is seen by the next statement.
+        NaN-containing floats are withheld — see
+        stats.chunk_stats.data_var_bounds."""
+        store = self._chunk_agg.get(stmt.table)
+        if stats is None or store is None or not any(
+            it.fn in ("min", "max") and it.arg not in stats.column_min_max
+            for it in stmt.items
+        ):
+            return stats
+        from zarr_datafusion_spark.stats.chunk_stats import (
+            compute_zarr_chunk_stats,
+            data_var_bounds,
+        )
+
+        try:
+            bounds = data_var_bounds(compute_zarr_chunk_stats(self.spark, store))
+        except Exception:
+            return stats
+        return replace(stats, column_min_max={**stats.column_min_max, **bounds})
 
     def table_stats(self, name: str) -> TableStats | None:
         return self._stats.get(name)
@@ -370,7 +388,8 @@ class Engine:
         )
 
         out = shortcuts.try_stats_shortcut(
-            self.spark, stmt, schema, self._stats.get(stmt.table)
+            self.spark, stmt, schema,
+            self._with_var_bounds(stmt, self._stats.get(stmt.table)),
         )
         store = self._chunk_agg.get(stmt.table)
         if out is None and store is not None:

@@ -595,6 +595,8 @@ _COS_PAIRS_ORACLE = """
 #: cosine threshold for dedup_embedding_cosine (mirrors the oracle's
 #: literal 0.30)
 COS_PAIRS_THRESHOLD = 0.30
+#: rows per hash-chunk of a label block in the cosine chunk-pair join
+COS_CHUNK_ROWS = 1024
 
 
 @_q("dedup_embedding_cosine", _COS_PAIRS_ORACLE)
@@ -671,7 +673,7 @@ def dedup_embedding_cosine(spark, sf_dir):
         )
     )
     margin = COS_PAIRS_THRESHOLD - 1e-6
-    chunk_rows = int(os.environ.get("SPARK_GRAFT_COS_CHUNK_ROWS", "1024"))
+    chunk_rows = COS_CHUNK_ROWS
 
     counts = e.groupBy("label").agg(F.count(F.lit(1)).alias("n_block"))
     tasks = (

@@ -97,6 +97,9 @@ def get_spark(app_name: str = "zarr_datafusion_spark") -> SparkSession:
             os.environ.get("SPARK_GRAFT_PERIODIC_GC", "1min"),
         )
         .config("spark.ui.enabled", "false")
+        # no \r[Stage N:>...] frames in the stdout of scripts that print
+        # one line per result
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     spark = builder.getOrCreate()

@@ -47,7 +47,7 @@ _LAYOUT = "cstats4"
 
 def _store_marker(store_path: str) -> str | None:
     """The store's metadata completion marker file (local stores) —
-    its (size, mtime_ns) keys the sidecar's staleness."""
+    its (inode, size, mtime_ns) keys the sidecar's staleness."""
     for name in (".zmetadata", "zarr.json", ".zgroup"):
         p = os.path.join(store_path, name)
         if os.path.isfile(p):
@@ -76,8 +76,10 @@ def chunk_stats_sidecar_path(store_path: str) -> str | None:
     Key discipline (regenerated stores can never be served stale
     pruning decisions):
 
-    * local stores: md5(path, marker size, mtime_ns, layout) — the
-      persisted-index pattern, no reads;
+    * local stores: md5(path, marker inode, size, mtime_ns, layout) —
+      the persisted-index pattern, no reads; writers that change data
+      without changing metadata re-publish the marker as a new file
+      (``sink.update_zarr_region``);
     * remote stores (s3/gs/http — THE 100 TB case): md5(url, marker
       CONTENT, layout) — object stores expose no reliable mtime
       cheaply, but the consolidated-metadata marker is small, changes
@@ -91,13 +93,11 @@ def chunk_stats_sidecar_path(store_path: str) -> str | None:
     store_path = normalize_store_path(store_path)
     if StorageLocation.parse(store_path).is_remote:
         fs, root = store_fs(store_path)
-        content = None
         for name in (".zmetadata", "zarr.json", ".zgroup"):
-            p = f"{root.rstrip('/')}/{name}"
-            if fs.exists(p):
-                content = fs.read_bytes(p)
+            content = fs.try_read_bytes(f"{root.rstrip('/')}/{name}")
+            if content is not None:
                 break
-        if content is None:
+        else:
             return None
         key = hashlib.md5(
             f"{store_path}:{_LAYOUT}:".encode() + content
@@ -114,8 +114,8 @@ def chunk_stats_sidecar_path(store_path: str) -> str | None:
         return None
     st = os.stat(marker)
     key = hashlib.md5(
-        f"{os.path.abspath(store_path)}:{st.st_size}:{st.st_mtime_ns}:"
-        f"{_LAYOUT}".encode()
+        f"{os.path.abspath(store_path)}:{st.st_ino}:{st.st_size}:"
+        f"{st.st_mtime_ns}:{_LAYOUT}".encode()
     ).hexdigest()[:12]
     repo_root = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

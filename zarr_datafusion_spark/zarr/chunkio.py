@@ -24,6 +24,7 @@ import zlib
 import numpy as np
 
 from zarr_datafusion_spark.zarr.metadata import ZarrArrayMeta, numpy_dtype_for
+from zarr_datafusion_spark.zarr.storage import store_fs
 
 
 class _IoCounters(threading.local):
@@ -341,19 +342,6 @@ def _chunk_path(store_path: str, meta: ZarrArrayMeta, idx: tuple[int, ...]) -> s
     return os.path.join(store_path, meta.name, meta.chunk_key_separator.join(parts))
 
 
-import functools
-
-
-@functools.lru_cache(maxsize=64)
-def _store_fs(store_path: str):
-    """Adapter dispatch (local vs fsspec), memoized per store path —
-    executor tasks call read_chunk per chunk and the adapter is
-    stateless."""
-    from zarr_datafusion_spark.zarr.storage import store_fs
-
-    return store_fs(store_path)[0]
-
-
 def read_chunk(store_path: str, meta: ZarrArrayMeta, idx: tuple[int, ...]) -> np.ndarray:
     """Read + decode one chunk; missing file -> fill_value (Zarr spec)."""
     return read_chunk_ex(store_path, meta, idx)[0]
@@ -437,7 +425,8 @@ def _mmap_dtype(store_path: str, meta: ZarrArrayMeta):
 def _read_chunk_ex_uncached(
     store_path: str, meta: ZarrArrayMeta, idx: tuple[int, ...]
 ) -> tuple[np.ndarray, bool]:
-    fs = _store_fs(store_path)
+    # per chunk: served from storage's adapter cache
+    fs = store_fs(store_path)[0]
     dtype = numpy_dtype_for(meta.dtype, meta.byte_order)
     path = _chunk_path(store_path, meta, idx)
     mm_dtype = _mmap_dtype(store_path, meta)

@@ -42,15 +42,16 @@ same adapter protocol as every other backend, so schema inference,
 projection/filter/limit pushdown, chunk-statistics pruning, the LRU
 chunk cache, and the SQL engine all run UNCHANGED over a snapshot.
 The repository itself may live on any supported backend (local, s3,
-gs, http) — reads go through :func:`~zarr_datafusion_spark.zarr.
-storage.store_fs`.  COMMITS work on local, ``s3://``, and ``gs://``
-repos: content-addressed objects are plain PUTs (immutable keys), and
-the generation-ref create-exclusive maps to the stores' conditional
-PUT (``If-None-Match: *`` / ``x-goog-if-generation-match: 0``),
-verified live per endpoint by :func:`_verify_conditional_put` —
-backends without an atomic conditional create refuse loudly
-(``http://``, plain fsspec), because an unserialized ref publication
-is not transactional.  This is the 100 TB posture item: the
+gs, az, http) — reads and writes go through the one dispatch,
+:func:`~zarr_datafusion_spark.zarr.storage.store_fs`.  COMMITS work on
+local, ``s3://``, ``gs://`` and ``az://`` repos: content-addressed
+objects are plain PUTs (immutable keys), and the generation-ref
+create-exclusive maps to the stores' conditional PUT
+(``If-None-Match: *`` / ``x-goog-if-generation-match: 0``), verified
+live per endpoint by :func:`_verify_conditional_put` — a backend
+without an atomic conditional create (``http://``) is refused by
+:func:`~zarr_datafusion_spark.zarr.storage.writable_store_fs`, because
+an unserialized ref publication is not transactional.  This is the 100 TB posture item: the
 transactional layer's value is highest exactly where stores are
 remote.  ``append_snapshot`` works remotely too (sparse staging + a
 parent-manifest merge — cost ∝ the append), and ``gc_repo`` sweeps
@@ -73,6 +74,7 @@ import os
 import re
 import urllib.error
 
+from zarr_datafusion_spark.zarr.storage import store_fs, writable_store_fs
 from zarr_datafusion_spark.zarr.storage import tmp_name as _tmp_name
 
 __all__ = [
@@ -154,25 +156,6 @@ def _is_local(repo: str) -> bool:
     return "://" not in repo or repo.startswith("file://")
 
 
-def _repo_writer(repo: str):
-    """(fs, norm) with a WRITE-capable adapter for the repo, or a loud
-    refusal — a commit whose ref publication can silently
-    last-writer-win is not transactional.  Shared resolution (and
-    per-process cache) with the distributed sink:
-    :func:`~zarr_datafusion_spark.zarr.storage.writable_store_fs`."""
-    from zarr_datafusion_spark.zarr.storage import writable_store_fs
-
-    return writable_store_fs(repo)
-
-
-def _writer_cache() -> dict:
-    """The shared writer-adapter cache (tests clear it when re-pointing
-    an endpoint env var at a fresh fixture server)."""
-    from zarr_datafusion_spark.zarr.storage import _WRITABLE_CACHE
-
-    return _WRITABLE_CACHE
-
-
 #: endpoint-level conditional-PUT verification cache: None = unprobed,
 #: True = verified, False = the backend IGNORES the precondition (the
 #: silent-last-writer-wins failure mode some S3-compatibles have) —
@@ -226,7 +209,7 @@ def init_repo(repo: str) -> str:
                 json.dump(_FORMAT, f)
             os.replace(tmp, marker)
         return repo
-    fs, norm = _repo_writer(repo)
+    fs, norm = writable_store_fs(repo)
     _verify_conditional_put(fs, norm)
     if fs.try_read_bytes(f"{norm}/{_MARKER}") is None:
         fs.write_bytes(f"{norm}/{_MARKER}", _canon(_FORMAT))
@@ -253,7 +236,7 @@ def _write_object(repo: str, rel: str, payload: bytes) -> None:
                 raise
             os.unlink(tmp)
         return
-    fs, norm = _repo_writer(repo)
+    fs, norm = writable_store_fs(repo)
     p = f"{norm}/{rel}"
     if fs.obj_exists(p):  # structural sharing: one HEAD beats a re-PUT
         return
@@ -322,8 +305,6 @@ def resolve_ref(repo: str, ref: str | None) -> str:
     ``None``/'' → head of ``main``; ``snap:<id>`` or a bare id → that
     snapshot; ``tag:<name>`` → the tag; ``branch:<name>[~N]`` → the
     branch head (N commits back)."""
-    from zarr_datafusion_spark.zarr.storage import store_fs
-
     fs, norm = store_fs(repo)
     ref = ref or "branch:main"
     if ref.startswith("snap:"):
@@ -396,7 +377,7 @@ def _publish_ref(repo: str, rel: str, doc: dict) -> None:
     if _is_local(repo):
         _publish_ref_exclusive(os.path.join(repo, *rel.split("/")), doc)
         return
-    fs, norm = _repo_writer(repo)
+    fs, norm = writable_store_fs(repo)
     fs.write_bytes(f"{norm}/{rel}", _canon(doc), if_none_match=True)
 
 
@@ -421,8 +402,6 @@ def _fence_branch_creation(
     head that may not be theirs — rebase on that head and retry, or
     pick another name.  Cost: one LIST per branch creation (and a
     snapshot read only in the already-raced case)."""
-    from zarr_datafusion_spark.zarr.storage import store_fs
-
     fs, norm = store_fs(repo)
     bdir = f"{norm}/refs/branch.{branch}"
     others = sorted(
@@ -526,7 +505,7 @@ def _acquire_branch_token(repo: str, branch: str) -> bool:
                 return True
             except FileExistsError:
                 return False  # lost the recovery race
-    fs, norm = _repo_writer(repo)
+    fs, norm = writable_store_fs(repo)
     marker = f"{norm}/refs/branch.{branch}/.created"
     try:
         fs.write_bytes(marker, b"{}", if_none_match=True)
@@ -551,8 +530,6 @@ def create_branch(repo: str, name: str, snapshot_id: str) -> None:
     _check_ref_name("branch", name)
     if not _is_local(repo):
         init_repo(repo)  # capability probe before any publication
-    from zarr_datafusion_spark.zarr.storage import store_fs
-
     fs, norm = store_fs(repo)
     snap = _load_snapshot(fs, norm, snapshot_id)  # must exist
     if not _acquire_branch_token(repo, name):
@@ -575,8 +552,6 @@ def create_branch(repo: str, name: str, snapshot_id: str) -> None:
 def list_refs(repo: str) -> dict[str, dict[str, str]]:
     """``{"branches": {name: head snapshot}, "tags": {name: snapshot}}``
     — the ref listing (``git branch -a`` / ``git tag``)."""
-    from zarr_datafusion_spark.zarr.storage import store_fs
-
     fs, norm = store_fs(repo)
     out: dict[str, dict[str, str]] = {"branches": {}, "tags": {}}
     try:
@@ -618,8 +593,6 @@ def create_tag(repo: str, name: str, snapshot_id: str) -> None:
 def history(repo: str, ref: str | None = None) -> list[dict]:
     """Snapshot documents from the resolved ref back to the root
     (newest first) — the ``git log`` of the store."""
-    from zarr_datafusion_spark.zarr.storage import store_fs
-
     fs, norm = store_fs(repo)
     out: list[dict] = []
     sid: str | None = resolve_ref(repo, ref)
@@ -656,8 +629,6 @@ def _ingest_distributed(spark, store_dir: str, repo: str, keys: list[str]):
     nparts = max(1, min(len(keys) // 4 + 1, sc.defaultParallelism * 4))
 
     def part(it):
-        from zarr_datafusion_spark.zarr.storage import store_fs
-
         fs, norm = store_fs(store_dir)
         for key in it:
             yield key, _ingest_one(fs, norm, repo, key)
@@ -703,9 +674,7 @@ def commit_store(
     """
     repo = init_repo(repo)
     _check_ref_name("branch", branch)
-    from zarr_datafusion_spark.zarr.storage import store_fs
-
-    rfs, rnorm = _repo_writer(repo)
+    rfs, rnorm = writable_store_fs(repo)
     head = _branch_head(rfs, rnorm, branch)
     head_sid, head_seq = head if head else (None, 0)
     if expected_snapshot is not ... and expected_snapshot != head_sid:
@@ -965,8 +934,6 @@ class IcechunkStoreFS:
     def __init__(
         self, repo: str, ref: str | None = None, requested: str | None = None
     ):
-        from zarr_datafusion_spark.zarr.storage import store_fs
-
         self._fs, self._repo = store_fs(repo)
         sid = resolve_ref(repo, ref)
         snap = _load_snapshot(self._fs, self._repo, sid)
@@ -1101,7 +1068,7 @@ def gc_repo(repo: str, *, grace_seconds: float = 900.0) -> dict[str, int]:
     just-staged debris use it)."""
     import time
 
-    fs, norm = _repo_writer(repo)
+    fs, norm = writable_store_fs(repo)
     now = time.time()
 
     live_snaps: set[str] = set()

@@ -33,8 +33,8 @@ the store key space is served from the refs dict and chunk reads
 become byte-range reads of the target files.  Scale posture: each
 executor task range-reads only the chunks of its own partition (HTTP
 ``Range`` / seek+read), the refs JSON is parsed once per worker
-process (``chunkio._store_fs`` memoisation), and nothing ever fetches
-a whole archival file for one chunk.
+process and adapter-cache lifetime (``storage.store_fs``), and nothing
+ever fetches a whole archival file for one chunk.
 
 Reference stores are READ-ONLY by construction (the refs describe
 someone else's bytes); the writer refuses the scheme.
@@ -46,6 +46,8 @@ import base64
 import json
 import os
 import re
+
+from zarr_datafusion_spark.zarr.storage import store_fs
 
 __all__ = [
     "ReferenceStoreFS",
@@ -60,8 +62,6 @@ _TEMPLATE_RE = re.compile(r"\{\{\s*([A-Za-z_][A-Za-z0-9_]*)\s*\}\}")
 def load_references(refs_path: str) -> dict:
     """Parse a kerchunk JSON (v0 flat or v1 enveloped) into a plain
     ``{key: target}`` dict with templates already substituted."""
-    from zarr_datafusion_spark.zarr.storage import store_fs
-
     loc_fs, norm = store_fs(refs_path)
     doc = json.loads(loc_fs.read_text(norm))
     if not isinstance(doc, dict):
@@ -255,34 +255,14 @@ class ReferenceStoreFS:
     @staticmethod
     def _read_target(url: str, offset: int | None, length: int | None) -> bytes:
         """Whole-file or byte-range read of a payload target.  Local
-        targets seek; http(s) targets send an RFC 7233 ``Range`` header
-        (one ranged GET per chunk — the object-store access pattern
-        kerchunk exists for); s3/gs targets go through fsspec when
-        available."""
-        if url.startswith(("http://", "https://")):
-            import urllib.request
-
-            req = urllib.request.Request(url)
-            if offset is not None:
-                req.add_header("Range", f"bytes={offset}-{offset + length - 1}")
-            with urllib.request.urlopen(req, timeout=60) as resp:
-                data = resp.read()
-            if offset is not None and resp.status == 200 and len(data) > length:
-                # server ignored the Range header: honour it client-side
-                data = data[offset : offset + length]
-            return data
-        if url.startswith(("s3://", "gs://")):
-            try:
-                import fsspec
-            except ImportError as e:
-                raise NotImplementedError(
-                    f"kerchunk target {url!r} requires the 'fsspec' package"
-                ) from e
-            with fsspec.open(url, "rb") as f:
-                if offset is None:
-                    return f.read()
-                f.seek(offset)
-                return f.read(length)
+        targets seek; http(s), s3, gs and az targets go through their
+        storage adapter, a range as one ranged GET per chunk (the
+        object-store access pattern kerchunk exists for)."""
+        if url.startswith(("http://", "https://", "s3://", "gs://", "az://")):
+            fs, norm = store_fs(url)
+            if offset is None:
+                return fs.read_bytes(norm)
+            return fs.read_range(norm, offset, length)
         if "://" in url and not url.startswith("file://"):
             raise NotImplementedError(
                 f"unsupported kerchunk target scheme in {url!r}"

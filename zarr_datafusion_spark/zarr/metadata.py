@@ -36,6 +36,8 @@ from dataclasses import dataclass, field
 import numpy as np
 from pyspark.sql import types as T
 
+from zarr_datafusion_spark.zarr.storage import StorageLocation, store_fs
+
 # ---------------------------------------------------------------------------
 # dtype normalization (reference src/reader/dtype.rs:9-75)
 # ---------------------------------------------------------------------------
@@ -202,27 +204,18 @@ class ZarrStoreMeta:
 
 def normalize_store_path(store_path: str) -> str:
     """Accept plain paths, ``file:``/``file://`` URIs (Spark's DDL path
-    resolution produces the latter), and remote ``s3://``/``gs://``
-    URLs (reference ``storage.rs:63-89``).  Remote URLs pass through
-    unchanged; their reads dispatch to fsspec via
-    :func:`zarr_datafusion_spark.zarr.storage.store_fs` (a clear
-    NotImplementedError if fsspec is absent)."""
+    resolution produces the latter), and remote ``s3://``/``gs://``/
+    ``az://``/``http(s)://`` URLs (reference ``storage.rs:63-89``).  Remote URLs pass through
+    unchanged; their reads dispatch to the storage adapters via
+    :func:`zarr_datafusion_spark.zarr.storage.store_fs`."""
     if store_path.startswith("file:") and not store_path.startswith("file://"):
         store_path = "file://" + store_path[len("file:") :]
-    from zarr_datafusion_spark.zarr.storage import StorageLocation
-
     loc = StorageLocation.parse(store_path)
     return loc.url() if loc.is_remote else loc.path
 
 
-def _fs_for(store_path: str):
-    from zarr_datafusion_spark.zarr.storage import store_fs
-
-    return store_fs(store_path)
-
-
 def detect_zarr_version(store_path: str) -> int:
-    fs, store_path = _fs_for(normalize_store_path(store_path))
+    fs, store_path = store_fs(normalize_store_path(store_path))
     root_v3 = os.path.join(store_path, "zarr.json")
     if fs.exists(root_v3):
         return 3
@@ -421,7 +414,7 @@ def discover_arrays(store_path: str) -> ZarrStoreMeta:
     """Discover all arrays; classify, order, compute coord min/max."""
     from zarr_datafusion_spark.zarr.chunkio import read_array
 
-    fs, store_path = _fs_for(normalize_store_path(store_path))
+    fs, store_path = store_fs(normalize_store_path(store_path))
     version = detect_zarr_version(store_path)
     arrays: list[ZarrArrayMeta] | None = None
     if version == 2:

@@ -907,14 +907,36 @@ def append_zarr(df: DataFrame, store_path: str) -> dict[str, int]:
     }
 
 
+def _republish_marker(store_path: str) -> None:
+    """Replace the store's metadata marker with a new file holding the
+    same bytes, so every cache keyed on the marker's identity (the
+    chunk-statistics sidecar: inode, size, mtime) sees a new store
+    version once the chunk files changed — within one mtime tick too,
+    since the replacement is a new inode."""
+    from zarr_datafusion_spark.stats.chunk_stats import _store_marker
+    from zarr_datafusion_spark.zarr.storage import tmp_name
+
+    marker = _store_marker(store_path)
+    if marker is None:
+        return
+    with open(marker, "rb") as f:
+        payload = f.read()
+    tmp = tmp_name(marker)
+    with open(tmp, "wb") as f:
+        f.write(payload)
+    os.replace(tmp, marker)
+
+
 def update_zarr_region(df: DataFrame, store_path: str) -> dict[str, int]:
     """Overwrite EXISTING outer slabs of a sink-written store in place —
     the region-write half of the ingestion workflow (:func:`append_zarr`
     adds new slabs; this corrects ones already written, e.g. a
     reanalysis re-issuing time steps).  The update unit is again the
     store's own outer chunk, so the operation rewrites exactly the
-    affected chunk files and touches NO metadata (shape, coords and
-    consolidated metadata are all unchanged by construction).
+    affected chunk files and changes NO metadata (shape, coords and
+    consolidated metadata are all unchanged by construction); the
+    metadata marker is re-published with the same bytes so statistics
+    keyed on it are recomputed.
 
     Contract (validated before any file is touched):
 
@@ -1038,6 +1060,7 @@ def update_zarr_region(df: DataFrame, store_path: str) -> dict[str, int]:
         )
         .collect()
     )
+    _republish_marker(store_path)
     return {
         "updated_slabs": len(results),
         "outer_size": len(old_outer),
