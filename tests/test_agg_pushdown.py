@@ -270,11 +270,10 @@ def test_rollup_avg_overflow_defers_to_full_plan(spark, tmp_path):
 
 
 def test_bail_shapes_fall_through(agg_engine, spark):
-    """Shapes outside EVERY rewrite's contract must leave the full
-    plan in charge (and the answers correct): ungrouped-unfiltered
-    GROUP BY, OR disjunctions, parenthesised predicates.  (Data-var
-    and mixed-column predicates now route to the pruned-scan
-    aggregate rewrite instead — covered by test_pruned_agg_rewrite.)"""
+    """Shapes outside every statistics rewrite's contract answer as
+    Spark does: with a WHERE they run over the statement's own pruned
+    relation, without one on the view: unfiltered GROUP BY, OR
+    disjunctions, parenthesised predicates, string literals."""
     for sql, rows in [
         ("SELECT time, SUM(pressure) AS s FROM tc GROUP BY time", 12),
         ("SELECT SUM(pressure) AS s FROM tc WHERE time >= 2 OR time <= 1", 1),
@@ -295,10 +294,12 @@ def test_bail_shapes_fall_through(agg_engine, spark):
         ("SELECT time AS t2 FROM tc WHERE time >= 11 AND lat = 0", 14),
     ]:
         df = agg_engine.sql(sql)
-        assert not agg_engine.last_query_used_shortcut, sql
+        kind = "pruned" if "WHERE" in sql else None
+        assert agg_engine.last_shortcut_kind == kind, sql
         got = df.collect()
         assert len(got) == rows
-        assert got == spark.sql(sql).collect()
+        # no ORDER BY fixes the row order of the unsorted shapes
+        assert sorted(got) == sorted(spark.sql(sql).collect())
 
 
 @pytest.mark.parametrize(
@@ -459,22 +460,25 @@ def test_shortcut_kind_accounting(agg_engine):
         ("SELECT time, lat FROM tc ORDER BY time DESC LIMIT 3;", "pruned"),
         ("SELECT time, SUM(pressure) AS s FROM tc WHERE lat < 3 GROUP BY time",
          "pruned"),
+        # declined by the statistics rewrites, served by the
+        # statement's own pruned relation
         ("SELECT time, pressure FROM tc WHERE time >= 2 ORDER BY time LIMIT 5",
-         None),
+         "pruned"),
         ("SELECT time, lat, SUM(pressure) AS s FROM tc GROUP BY time, lat", None),
         ("SELECT time, SUM(pressure) AS s FROM tc WHERE time >= 2 "
-         "GROUP BY time ORDER BY time", None),
-        ("SELECT time AS t2 FROM tc WHERE time >= 2", None),
+         "GROUP BY time ORDER BY time", "pruned"),
+        ("SELECT time AS t2 FROM tc WHERE time >= 2", "pruned"),
     ]:
         agg_engine.sql(sql)
         assert agg_engine.last_shortcut_kind == kind, sql
 
 
 def test_one_schema_lookup_per_statement(agg_engine, spark, monkeypatch):
-    """``Engine.sql`` parses a statement once and looks its table's
-    schema up at most once for the whole rewrite chain; a statement
-    outside the subset, or over a table without statistics, makes no
-    schema or sidecar lookup."""
+    """``Engine.sql`` parses a statement once and takes a Zarr table's
+    schema from its registration, so no statement looks a schema up; a
+    statement over a table without statistics makes no sidecar lookup
+    either, and one outside the subset or declined by the statistics
+    answers checks the sidecar for its own relation."""
     from zarr_datafusion_spark.stats import chunk_stats
 
     tables, sidecars = [], []
@@ -487,16 +491,17 @@ def test_one_schema_lookup_per_statement(agg_engine, spark, monkeypatch):
     spark.sql("SELECT * FROM tc").createOrReplaceTempView("tc_nostats")
     try:
         for sql, lookups in [
-            ("SELECT COUNT(*) AS n FROM tc_nostats", 0),
-            ("SELECT SUM(pressure) AS s FROM tc WHERE time >= 2 OR time <= 1", 0),
-            # declined by every rewrite but the last
+            ("SELECT COUNT(*) AS n FROM tc_nostats", (0, 0)),
+            ("SELECT SUM(pressure) AS s FROM tc WHERE time >= 2 OR time <= 1",
+             (0, 1)),
+            # declined by every statistics rewrite
             ("SELECT time, SUM(pressure) AS s FROM tc WHERE lat < 3 GROUP BY time",
-             1),
+             (0, 1)),
         ]:
             tables.clear()
             sidecars.clear()
             agg_engine.sql(sql)
-            assert (len(tables), min(len(sidecars), 1)) == (lookups, lookups), sql
+            assert (len(tables), min(len(sidecars), 1)) == lookups, sql
     finally:
         spark.catalog.dropTempView("tc_nostats")
 
@@ -506,7 +511,8 @@ def test_ddl_options_enable_chunk_stats(spark):
     sidecar from SQL: ``CREATE EXTERNAL TABLE ... STORED AS ZARR
     LOCATION '...' OPTIONS ('chunk_stats' 'true')`` makes aggregate
     and top-k pushdown serve the table; without the option the DDL
-    registers the plain (also multi-query-safe) view."""
+    registers the plain (also multi-query-safe) view, and a filtered
+    statement still runs over its own pruned relation."""
     from zarr_datafusion_spark.engine import Engine
     from zarr_datafusion_spark.operators.zarr_queries import trending_store
 
@@ -526,7 +532,7 @@ def test_ddl_options_enable_chunk_stats(spark):
         f"LOCATION '{trending_store()}'"
     )
     e.sql("SELECT SUM(pressure) AS s FROM trend_ddl_plain WHERE time >= 6")
-    assert not e.last_query_used_shortcut
+    assert e.last_shortcut_kind == "pruned"
 
 
 def test_sql_filter_rewrite_prunes_and_matches(spark, tmp_path, monkeypatch):
@@ -580,10 +586,14 @@ def test_sql_filter_rewrite_prunes_and_matches(spark, tmp_path, monkeypatch):
     # the named view itself stays lazy and multi-query-safe
     assert spark.sql("SELECT COUNT(*) AS n FROM tr_fr").collect()[0].n == 1680
 
-    # non-rewritable shapes answer through the view, correctly
+    # a shape outside the subset runs over its own relation too;
+    # Spark pushes no OR to a Python source, so it reads every slab
     odd = "SELECT time, pressure FROM tr_fr WHERE pressure >= 1075 OR lat > 2"
-    e.sql(odd)
-    assert not e.last_query_used_shortcut
+    shutil.rmtree(sd, ignore_errors=True)
+    odd_rows = sorted(map(tuple, e.sql(odd).collect()))
+    assert e.last_shortcut_kind == "pruned"
+    assert collect_stats_dir(sd).rows == 1680
+    assert odd_rows == sorted(map(tuple, spark.sql(odd).collect()))
 
 
 def test_pruned_agg_rewrite(spark, tmp_path, monkeypatch):
@@ -1006,3 +1016,171 @@ def test_explain_analyze_runs_pruned_plans(agg_engine):
     assert agg_engine.last_shortcut_kind == "pruned"
     assert "no scan" not in out and "LocalTableScan" in out
     assert "no scan" in agg_engine.explain_analyze("SELECT COUNT(*) AS n FROM tc")
+
+
+@pytest.fixture(scope="module")
+def ref_store(tmp_path_factory):
+    """32 x 64 x 128 int64 store, one outer index per data chunk; each
+    coordinate is one chunk."""
+    from zarr_datafusion_spark.zarr.writer import write_store
+
+    root = tmp_path_factory.mktemp("refs")
+    return write_store(str(root / "series.zarr"), {
+        "time": (np.arange(32, dtype=np.int64), (32,)),
+        "lat": (np.arange(64, dtype=np.int64), (64,)),
+        "lon": (np.arange(128, dtype=np.int64), (128,)),
+        "v": (np.arange(32 * 64 * 128, dtype=np.int64).reshape(32, 64, 128)
+              % 1000, (1, 64, 128)),
+    })
+
+
+def _spilling(monkeypatch, sd):
+    """Point every ``read_zarr`` relation at the ``sd`` stats dir."""
+    import zarr_datafusion_spark.zarr as Z
+
+    orig = Z.read_zarr
+
+    def instrumented(spark_, store, **kw):
+        kw.setdefault("stats_dir", sd)
+        return orig(spark_, store, **kw)
+
+    monkeypatch.setattr(Z, "read_zarr", instrumented)
+
+
+@pytest.mark.parametrize(
+    "sql, rows, chunks",
+    [
+        # chunks: the three coordinates per scan task, and the data
+        # chunks of its window
+        # two slabs, one per side of the self-join
+        ("SELECT COUNT(*) AS n FROM series a JOIN series b "
+         "ON a.lat = b.lat AND a.lon = b.lon WHERE a.time = 1 AND b.time = 3",
+         2 * 64 * 128, 2 * (3 + 1)),
+        ("WITH w AS (SELECT * FROM series WHERE time BETWEEN 4 AND 7) "
+         "SELECT COUNT(*) AS n, SUM(v) AS s FROM w", 4 * 64 * 128, 3 + 4),
+        # four slabs outside, two cells of one slab inside the subquery
+        ("SELECT COUNT(*) AS n FROM series WHERE time BETWEEN 10 AND 13 AND lat "
+         "IN (SELECT lat FROM series WHERE time = 20 AND lon = 0 AND lat < 2)",
+         4 * 64 * 128 + 2, (3 + 4) + (3 + 1)),
+    ],
+)
+def test_every_reference_reads_only_its_window(
+    spark, ref_store, tmp_path, monkeypatch, sql, rows, chunks
+):
+    """A self-join, a CTE and an IN subquery over a registered store:
+    each reference runs over its own fresh relation, so each reads only
+    its own window, and the answer is the view's."""
+    from zarr_datafusion_spark.engine import Engine
+    from zarr_datafusion_spark.stats.io_stats import collect_stats_dir
+
+    sd = str(tmp_path / "io")
+    _spilling(monkeypatch, sd)
+    e = Engine(spark)
+    e.register_zarr("series", ref_store, data_filter_pushdown=True)
+    got = e.sql(sql).collect()
+    assert e.last_shortcut_kind == "pruned"
+    s = collect_stats_dir(sd)
+    assert (s.rows, s.n_chunks) == (rows, chunks)
+    assert got == spark.sql(sql).collect()
+
+
+def test_table_without_chunk_stats_prunes(spark, tmp_path, monkeypatch):
+    """A table registered with no chunk statistics still reads only the
+    window a filtered statement names: 20 of 64 slabs."""
+    from zarr_datafusion_spark.engine import Engine
+    from zarr_datafusion_spark.stats.io_stats import collect_stats_dir
+    from zarr_datafusion_spark.zarr.writer import write_store
+
+    store = write_store(str(tmp_path / "plain.zarr"), {
+        "t": (np.arange(64, dtype=np.int64), (1,)),
+        "x": (np.arange(256, dtype=np.int64), (256,)),
+        "v": (np.arange(64 * 256, dtype=np.int64).reshape(64, 256), (1, 256)),
+    })
+    sd = str(tmp_path / "io")
+    _spilling(monkeypatch, sd)
+    e = Engine(spark)
+    e.register_zarr("plain", store)
+    sql = "SELECT t, x, v FROM plain WHERE t >= 10 AND t < 30"
+    got = sorted(map(tuple, e.sql(sql).collect()))
+    assert e.last_shortcut_kind == "pruned"
+    assert collect_stats_dir(sd).rows == 20 * 256
+    assert got == sorted(map(tuple, spark.sql(sql).collect()))
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT * FROM series",
+        "SELECT a.time, a.lat, a.lon, b.v FROM series a JOIN series b "
+        "ON a.time = b.time AND a.lat = b.lat AND a.lon = b.lon",
+    ],
+)
+def test_reused_result_is_planned_again(spark, ref_store, sql):
+    """A returned DataFrame planned twice, first filtered and then not,
+    answers both times as the view does: a bound relation always
+    pushes a filter, so Spark never replays its first window."""
+    from zarr_datafusion_spark.engine import Engine
+
+    e = Engine(spark)
+    e.register_zarr("series", ref_store)
+    df, view = e.sql(sql), spark.sql(sql)
+    assert df.filter("time = 3").count() == view.filter("time = 3").count()
+    assert df.count() == view.count() == 32 * 64 * 128
+
+
+def test_commands_and_errors_reach_spark_as_written(spark, ref_store, monkeypatch):
+    """Commands go to Spark byte-identical and unbound; no per-statement
+    view outlives ``Engine.sql``, even when the statement fails; an
+    analysis error is Spark's error for the user's own text."""
+    from pyspark.errors import AnalysisException
+
+    from zarr_datafusion_spark.engine import Engine
+
+    e = Engine(spark)
+    e.register_zarr("series", ref_store, data_filter_pushdown=True)
+    sent, sql = [], spark.sql
+    monkeypatch.setattr(spark, "sql", lambda q, *a, **k: sent.append(q) or sql(q, *a, **k))
+
+    def no_bound_views():
+        return not [
+            t.name for t in spark.catalog.listTables() if "__zds_ref_" in t.name
+        ]
+
+    try:
+        for cmd in [
+            "CREATE OR REPLACE TEMP VIEW series_early AS "
+            "SELECT * FROM series WHERE time < 3",
+            "EXPLAIN SELECT * FROM series WHERE time = 1",
+            "DESCRIBE series",
+        ]:
+            sent.clear()
+            e.sql(cmd)
+            assert sent == [cmd] and e.last_shortcut_kind is None
+            assert no_bound_views()
+        # the stored view reads the registered (lazy) view
+        n = e.sql("SELECT COUNT(*) AS n FROM series_early").collect()[0].n
+        assert n == 3 * 64 * 128
+        bad = "SELECT nosuchcol FROM series WHERE time < 3"
+        sent.clear()
+        with pytest.raises(AnalysisException) as err:
+            e.sql(bad)
+        assert sent[-1] == bad and "__zds_ref_" not in str(err.value)
+        assert no_bound_views()
+    finally:
+        spark.catalog.dropTempView("series_early")
+
+
+def test_table_names_match_as_spark_resolves_them(spark, ref_store):
+    """Spark resolves ``SERIES`` to a view registered as ``series``
+    (``spark.sql.caseSensitive`` is false), so the statistics answer
+    and the per-reference relation serve it too."""
+    from zarr_datafusion_spark.engine import Engine
+
+    e = Engine(spark)
+    e.register_zarr("series", ref_store, data_filter_pushdown=True)
+    assert e.sql("SELECT COUNT(*) AS n FROM SERIES").collect()[0].n == 32 * 64 * 128
+    assert e.last_shortcut_kind == "scan_free"
+    sql = "SELECT COUNT(*) AS n FROM Series a JOIN SERIES b ON a.time = b.time " \
+        "AND a.lat = b.lat AND a.lon = b.lon WHERE a.time = 2"
+    assert e.sql(sql).collect() == spark.sql(sql).collect()
+    assert e.last_shortcut_kind == "pruned"

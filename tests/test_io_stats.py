@@ -103,28 +103,24 @@ def test_format_line_shape():
 
 
 def test_unpruned_eager_plan_is_observable(spark, tmp_path):
-    """ADVICE r4 (datasource.py partitions() consume-and-clear): an
-    eager_pushdown reader that plans WITHOUT pushed coord filters —
-    whether genuinely unfiltered or after a lost pushdown — must leave
-    a countable marker in stats_dir, so a vanished A5 reduction shows
-    up in io_stats instead of only as a slower scan.  A pruned plan
-    must leave none."""
-    from zarr_datafusion_spark.stats.io_stats import count_unpruned_eager_plans
+    """Whether a scan pruned shows in the rows it read: the spilled
+    ``rows`` of an eager relation's filtered scan are its window, the
+    unfiltered scan's are the whole store."""
+    from pyspark.sql import functions as F
+
     from zarr_datafusion_spark.zarr import read_zarr
 
     store = fixture_store(2)
 
     d_pruned = str(tmp_path / "pruned")
     df = read_zarr(spark, store, stats_dir=d_pruned, eager_pushdown=True)
-    from pyspark.sql import functions as F
-
     assert df.filter(F.col("time") == 3).count() == 100
-    assert count_unpruned_eager_plans(d_pruned) == 0
+    assert collect_stats_dir(d_pruned).rows == 100
 
     d_full = str(tmp_path / "full")
     df2 = read_zarr(spark, store, stats_dir=d_full, eager_pushdown=True)
     assert df2.count() == 700
-    assert count_unpruned_eager_plans(d_full) >= 1
+    assert collect_stats_dir(d_full).rows == 700
 
 
 def test_data_filter_pushdown_skips_chunks(spark, tmp_path):

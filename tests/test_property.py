@@ -1171,6 +1171,10 @@ _HOSTILE_TEXT = st.one_of(
         "2",
         "' OR time = 0 OR '",
         "time BETWEEN 1 AND 2 AND lat = 3",
+        # the table's own name, which the per-reference splice must
+        # never touch inside a literal
+        "tcp",
+        "FROM tcp a JOIN tcp b",
     ]),
     st.text(alphabet=list("'()<>=- ANDORtime0123"), max_size=14),
 )

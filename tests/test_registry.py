@@ -52,3 +52,26 @@ def test_duplicate_names_across_modules_raise(monkeypatch):
     monkeypatch.setitem(extras.QUERIES, name, relational.QUERIES[name])
     with pytest.raises(ValueError, match="duplicate query names"):
         E.queries()
+
+
+def test_benchmark_trace_targets_resolve():
+    """``perfbench/layers.py`` patches package functions by name; every
+    ``TARGETS`` entry must resolve, or a rename silently breaks the
+    traced benchmark (``perfbench/run.py --trace 1``, ``smoke.py``)."""
+    import importlib
+    import importlib.util
+    import time
+
+    t0 = time.perf_counter()
+    spec = importlib.util.spec_from_file_location(
+        "_perfbench_layers", os.path.join(_REPO, "perfbench", "layers.py")
+    )
+    layers = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(layers)
+    missing = [
+        (mod, fn)
+        for mod, fn, _span in layers.TARGETS
+        if not callable(getattr(importlib.import_module(mod), fn, None))
+    ]
+    assert not missing
+    assert time.perf_counter() - t0 < 1.0

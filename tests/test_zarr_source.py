@@ -10,6 +10,8 @@ Mirrors the reference's integration suites:
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -1360,13 +1362,13 @@ def test_http_store_adapter_live(http_store, stores):
     ).read()
 
 
-@pytest.fixture()
-def s3_store(stores):
-    """Serve the v2_plain fixture store through a minimal live
-    S3-compatible server (path-style GET/HEAD objects + ListObjectsV2
-    XML listings — the protocol subset every S3-compatible store
-    speaks) on the port conftest exported as ``$AWS_ENDPOINT_URL_S3``,
-    and yield the store's ``s3://`` URL."""
+@contextlib.contextmanager
+def _live_s3(root: str, bucket: str = "testbucket"):
+    """Serve the files under ``root`` as the objects of ``bucket``
+    through a minimal live S3-compatible server (path-style GET/HEAD
+    objects + ListObjectsV2 XML listings — the protocol subset every
+    S3-compatible store speaks) on the port conftest exported as
+    ``$AWS_ENDPOINT_URL_S3``."""
     import http.server
     import os
     import threading
@@ -1374,18 +1376,13 @@ def s3_store(stores):
 
     from tests.conftest import S3_TEST_SOCK
 
-    store_path = stores["v2_plain"]
-    root = os.path.dirname(store_path)
-    name = os.path.basename(store_path)
-    bucket = "testbucket"
-
     class Handler(http.server.BaseHTTPRequestHandler):
         def log_message(self, *a):  # noqa: D102 - quiet test server
             pass
 
         def _keys(self):
             out = []
-            for dirpath, _dirs, files in os.walk(os.path.join(root, name)):
+            for dirpath, _dirs, files in os.walk(root):
                 for fn in files:
                     rel = os.path.relpath(os.path.join(dirpath, fn), root)
                     out.append(rel.replace(os.sep, "/"))
@@ -1452,10 +1449,89 @@ def s3_store(stores):
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     try:
-        yield f"s3://{bucket}/{name}"
+        yield f"s3://{bucket}"
     finally:
         # shutdown only — the socket stays bound for later fixtures
         srv.shutdown()
+
+
+@pytest.fixture()
+def s3_store(stores):
+    """The v2_plain fixture store served by :func:`_live_s3`; yields its
+    ``s3://`` URL."""
+    import os
+
+    store_path = stores["v2_plain"]
+    with _live_s3(os.path.dirname(store_path)) as bucket:
+        yield f"{bucket}/{os.path.basename(store_path)}"
+
+
+def test_discovery_requests_on_object_store(tmp_path, monkeypatch):
+    """Store discovery over s3:// reads each metadata file with one GET:
+    no HEAD, and a listing only to walk a store with no consolidated
+    metadata.  Counted by verb on a live S3-compatible server for v2,
+    v2 consolidated, v3 and v3 consolidated stores."""
+    import json
+    import os
+
+    from zarr_datafusion_spark.zarr.metadata import discover_arrays
+
+    root = tmp_path / "bucket"
+    for fmt in (2, 3):
+        write_store(str(root / f"v{fmt}"), ARRAYS, zarr_format=fmt)
+        cons = write_store(str(root / f"v{fmt}c"), ARRAYS, zarr_format=fmt)
+        meta = ".zarray" if fmt == 2 else "zarr.json"
+        entries = {}
+        for name in ARRAYS:
+            p = os.path.join(cons, name, meta)
+            entries[f"{name}/.zarray" if fmt == 2 else name] = json.load(open(p))
+            os.remove(p)
+        doc, path = (
+            ({"zarr_consolidated_format": 1, "metadata": entries}, ".zmetadata")
+            if fmt == 2
+            else (
+                {
+                    "zarr_format": 3,
+                    "node_type": "group",
+                    "consolidated_metadata": {
+                        "kind": "inline",
+                        "must_understand": False,
+                        "metadata": entries,
+                    },
+                },
+                "zarr.json",
+            )
+        )
+        json.dump(doc, open(os.path.join(cons, path), "w"))
+
+    calls: list[str] = []
+    send = st.S3HttpStoreFS._send
+
+    def counted(self, req):
+        verb = req.get_method()
+        calls.append("LIST" if "list-type=2" in req.full_url else verb)
+        return send(self, req)
+
+    monkeypatch.setattr(st.S3HttpStoreFS, "_send", counted)
+    counts = {}
+    with _live_s3(str(root)) as bucket:
+        for name in ("v2", "v2c", "v3", "v3c"):
+            st._ADAPTER_CACHE.clear()
+            calls.clear()
+            meta = discover_arrays(f"{bucket}/{name}")
+            assert meta.total_rows == NTIME * NLAT * NLON
+            counts[name] = {v: calls.count(v) for v in sorted(set(calls))}
+    st._ADAPTER_CACHE.clear()
+    # GETs: the root probes (v3: zarr.json; v2: zarr.json, .zmetadata,
+    # then .zgroup when not consolidated), one probe per listed entry
+    # (five arrays and the root marker; v2 arrays add .zattrs), and the
+    # one chunk of each of the three coordinates
+    assert counts == {
+        "v2": {"GET": 3 + 6 + 5 + 3, "LIST": 1},
+        "v2c": {"GET": 2 + 3},
+        "v3": {"GET": 1 + 6 + 3, "LIST": 1},
+        "v3c": {"GET": 1 + 3},
+    }
 
 
 def test_s3_store_adapter_live(s3_store, stores):

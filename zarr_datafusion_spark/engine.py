@@ -16,6 +16,7 @@ import re
 from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from zarr_datafusion_spark.session import get_spark, register_tables
 
@@ -38,6 +39,21 @@ class TableStats:
     column_null_count: dict[str, int] = field(default_factory=dict)
 
 
+@dataclass(frozen=True)
+class ZarrTable:
+    """A registered Zarr table, as its per-statement relations read it
+    (:mod:`~zarr_datafusion_spark.stats.filter_rewrite`): the store, the
+    view's schema, each coordinate's exact NaN-free minimum, whether a
+    chunk-statistics sidecar was built, and the read options."""
+
+    store: str
+    schema: StructType
+    bounds: dict
+    sidecar: bool
+    chunk_cache_mb: int
+    prefetch: int
+
+
 class Engine:
     """PySpark-native analytics engine with a stats-aware SQL front door."""
 
@@ -45,9 +61,8 @@ class Engine:
         self.spark = spark or get_spark()
         #: table name -> TableStats for registered tables with exact stats
         self._stats: dict[str, TableStats] = {}
-        #: table name -> zarr store path, for tables registered with
-        #: chunk-row statistics (chunk-level aggregate pushdown)
-        self._chunk_agg: dict[str, str] = {}
+        #: table name -> ZarrTable for every registered Zarr table
+        self._zarr: dict[str, ZarrTable] = {}
         #: "scan_free" | "pruned" when a rewrite answered the last sql()
         self._last_shortcut_kind: str | None = None
 
@@ -80,40 +95,32 @@ class Engine:
         """Register a Zarr store as a queryable table (reference
         ``CREATE EXTERNAL TABLE ... STORED AS ZARR``, ``src/datasource/factory.rs:19-65``).
 
-        ``data_filter_pushdown=True`` additionally computes (once per
-        store version, distributed, sidecar-cached) per-chunk-row
-        statistics for the data variables; ``sql`` folds them into
-        global bounds per statement, so the A8 rewrite answers
-        data-variable MIN/MAX scan-free (VERDICT r8 item 3).
+        The view is lazy (safe) so no query's window is replayed for the
+        next, yet ``sql`` prunes: each query statement naming the table
+        runs over a fresh window-narrowing relation per reference
+        (:mod:`~zarr_datafusion_spark.stats.filter_rewrite`).  Plain
+        ``spark.sql`` over the view, and commands, scan every chunk.
 
-        The VIEW itself is always registered in the safe (lazy)
-        pushdown mode: eager window narrowing bakes the narrowed
-        partition set into Spark's per-relation plan cache
-        (``ZarrDataSourceReader.eager_pushdown``), and a registered
-        SQL table is inherently multi-query — a second query against
-        the view would silently replay the first query's pruning
-        (ADVICE r9, medium).  Per-query eager + chunk-level data
-        pruning remains available via :func:`read_zarr` with
-        ``eager_pushdown=True, data_filter_pushdown=True`` on a fresh
-        relation per query.
+        ``data_filter_pushdown=True`` also builds (once per store
+        version, distributed, sidecar-cached) per-chunk-row statistics
+        of the data variables: ``sql`` then answers data-variable
+        MIN/MAX and chunk-aligned aggregates scan-free, serves
+        coordinate-leading top-k from the tail slabs, and its relations
+        skip chunk rows the statistics rule out.
 
-        ``chunk_cache_mb``/``prefetch`` apply the decoded-chunk LRU and
-        intra-task concurrent fetch (reference roadmap
-        ``README.md:326-327``) to every query through the view — both
-        are plan-cache-safe (data-level, staleness-keyed), unlike eager
-        narrowing.  The per-statement pruned REWRITES read through
-        default options (they touch boundary-sized windows where
-        caching matters least)."""
+        ``chunk_cache_mb``/``prefetch`` (the decoded-chunk LRU and
+        intra-task concurrent fetch, reference roadmap
+        ``README.md:326-327``) apply to every read of the table."""
         from zarr_datafusion_spark.stats.zarr_stats import zarr_table_stats
         from zarr_datafusion_spark.zarr import read_zarr
 
         # a name registered again describes a new store: nothing the
         # rewrites knew about the old one may answer for it
         self._stats.pop(name, None)
-        self._chunk_agg.pop(name, None)
+        self._zarr.pop(name, None)
         if store_path.startswith("icechunk://"):
             # pin a branch/tag ref ONCE so the view, the table stats,
-            # and the chunk-agg provider all answer from the SAME
+            # and the bound relations all answer from the SAME
             # snapshot — otherwise a concurrent commit could make the
             # stats shortcut and a plain SELECT disagree on one table
             # (r11 review finding); re-register to follow new commits
@@ -130,8 +137,9 @@ class Engine:
         try:
             self._stats[name] = zarr_table_stats(store_path)
         except Exception:
-            pass
-        if data_filter_pushdown and name in self._stats:
+            return df
+        sidecar = False
+        if data_filter_pushdown:
             # build the chunk-row stats now, and enable chunk-level
             # SUM/AVG/COUNT pushdown and data-variable MIN/MAX
             # (reference README.md:297, unchecked roadmap item)
@@ -141,12 +149,19 @@ class Engine:
                 )
 
                 compute_zarr_chunk_stats(self.spark, store_path)
-                self._chunk_agg[name] = store_path
+                sidecar = True
             except Exception:
                 pass
+        mins = self._stats[name].column_min_max.items()
+        bounds = {c: lo for c, (lo, _) in mins if lo == lo}  # NaN != NaN
+        self._zarr[name] = ZarrTable(
+            store_path, df.schema, bounds, sidecar, chunk_cache_mb, prefetch
+        )
         return df
 
-    def _with_var_bounds(self, stmt, stats: TableStats | None) -> TableStats | None:
+    def _with_var_bounds(
+        self, stmt, stats: TableStats | None, table: ZarrTable | None
+    ) -> TableStats | None:
         """``stats`` plus the global bounds of the data variables that
         ``stmt``'s MIN/MAX items name, folded from the chunk-row stats
         at statement time, so the A8 MIN/MAX→constant rewrite answers
@@ -155,8 +170,7 @@ class Engine:
         re-keys the stats sidecar, is seen by the next statement.
         NaN-containing floats are withheld — see
         stats.chunk_stats.data_var_bounds."""
-        store = self._chunk_agg.get(stmt.table)
-        if stats is None or store is None or not any(
+        if stats is None or table is None or not table.sidecar or not any(
             it.fn in ("min", "max") and it.arg not in stats.column_min_max
             for it in stmt.items
         ):
@@ -167,7 +181,9 @@ class Engine:
         )
 
         try:
-            bounds = data_var_bounds(compute_zarr_chunk_stats(self.spark, store))
+            bounds = data_var_bounds(
+                compute_zarr_chunk_stats(self.spark, table.store)
+            )
         except Exception:
             return stats
         return replace(stats, column_min_max={**stats.column_min_max, **bounds})
@@ -317,11 +333,13 @@ class Engine:
         return self.spark.sql(f"SELECT CAST({n} AS BIGINT) AS count")
 
     def sql(self, query: str) -> DataFrame:
-        """Run SQL; answer COUNT/MIN/MAX-only queries from cached exact
-        statistics without scanning (reference optimizer rules
-        ``count_optimization.rs:37-241`` / ``minmax_optimization.rs:43-239``),
-        accept the reference's ``CREATE EXTERNAL TABLE ... STORED AS
-        ZARR`` spelling, else delegate to Catalyst untouched.
+        """Run SQL: the reference's ``CREATE EXTERNAL TABLE``/``COPY ...
+        STORED AS ZARR`` spellings; statistics answers (reference rules
+        ``count_optimization.rs:37-241``/``minmax_optimization.rs:43-239``
+        plus chunk statistics); any other query statement naming a
+        registered Zarr table over a fresh pruned relation per reference
+        (:mod:`~zarr_datafusion_spark.stats.filter_rewrite`).  Commands
+        go to Spark as written.  Table names match as Spark resolves them.
 
         An answer computed on the driver (from statistics, or a pruned
         window below the Zarr planner's split threshold) is a snapshot
@@ -367,57 +385,53 @@ class Engine:
         rewritten = self._information_schema(query)
         if rewritten is not None:
             return rewritten
-        stmt = parse(query)
-        if stmt is None or not (
-            stmt.table in self._stats or stmt.table in self._chunk_agg
-        ):
-            return self.spark.sql(query)
-        try:
-            schema = {
-                f.name: f.dataType
-                for f in self.spark.table(stmt.table).schema.fields
-            }
-        except Exception:
-            return self.spark.sql(query)
+        names = "|".join(map(re.escape, self._stats.keys() | self._zarr.keys()))
+        if not (names and re.search(rf"(?<![\w$])({names})(?![\w$])", query, re.I)):
+            return self.spark.sql(query)  # names no registered table
+        # table names match as Spark resolves them
+        sensitive = self.spark.conf.get("spark.sql.caseSensitive", "false")
+        fold = str if sensitive.lower() == "true" else str.lower
+        zarr = {fold(n): t for n, t in self._zarr.items()}
+        stats = {fold(n): t for n, t in self._stats.items()}
         # looked up per call, so a patched rewrite takes effect
         from zarr_datafusion_spark.stats import (
-            agg_pushdown,
-            filter_rewrite,
-            shortcuts,
-            topk,
+            agg_pushdown, filter_rewrite, shortcuts, topk,
         )
 
-        out = shortcuts.try_stats_shortcut(
-            self.spark, stmt, schema,
-            self._with_var_bounds(stmt, self._stats.get(stmt.table)),
-        )
-        store = self._chunk_agg.get(stmt.table)
-        if out is None and store is not None:
+        stmt, schema, out = parse(query), None, None
+        key = stmt and fold(stmt.table)
+        if key not in stats and key not in zarr:
+            stmt = None  # a subset statement over an unregistered table
+        if stmt is not None:
+            table = zarr.get(key)
+            try:
+                found = table.schema if table else self.spark.table(stmt.table).schema
+            except Exception:
+                return self.spark.sql(query)
+            schema = {f.name: f.dataType for f in found.fields}
+            out = shortcuts.try_stats_shortcut(
+                self.spark, stmt, schema,
+                self._with_var_bounds(stmt, stats.get(key), table),
+            )
+            # chunk statistics: aggregates from the sidecar, top-k from
+            # the slabs that can reach the top k (README.md:297-298)
             for rewrite in (
-                agg_pushdown.try_chunk_agg_pushdown,
-                # coordinate-leading ORDER BY ... LIMIT k: scan only
-                # the slabs that can reach the top k (README.md:298)
-                topk.try_topk_pushdown,
-                # plain filtered SELECT: fresh pruned relation per
-                # query (coordinate windows + data-var chunk skipping)
-                # — the multi-query-safe SQL route to the A5/data
-                # pruning the lazy view deliberately forgoes
-                filter_rewrite.try_filter_rewrite,
-                # aggregates the stats assembly declined (float vars,
-                # data-var predicates, grouped multi-index chunks):
-                # Spark computes, the scan still prunes
-                filter_rewrite.try_pruned_agg_rewrite,
+                agg_pushdown.try_chunk_agg_pushdown, topk.try_topk_pushdown
             ):
-                out = rewrite(self.spark, stmt, schema, store)
-                if out is not None:
-                    break
+                if out is None and table is not None and table.sidecar:
+                    out = rewrite(self.spark, stmt, schema, table.store)
+            if out is None and (stmt.where is None or table is None):
+                return self.spark.sql(query)  # nothing to prune
+        if out is None:
+            # every reference gets its own window-narrowing relation
+            out = filter_rewrite.try_filter_rewrite(
+                self.spark, query, zarr, fold, stmt, schema
+            )
         if out is None:
             return self.spark.sql(query)
-        # honest accounting: boundary-slab assembly and top-k DO read
-        # their pruned slabs
-        self._last_shortcut_kind = getattr(
-            out, "_zds_shortcut_kind", "scan_free"
-        )
+        # honest accounting: boundary slabs, top-k and per-reference
+        # relations DO read their pruned slabs
+        self._last_shortcut_kind = getattr(out, "_zds_shortcut_kind", "scan_free")
         return out
 
     #: a SQL single-quoted string literal ('' = escaped quote) — the
@@ -489,33 +503,23 @@ class Engine:
             views,
             "table_schema string, table_name string, view_definition string",
         ).createOrReplaceTempView("__information_schema_views")
-        q = self._sub_outside_literals(
-            re.compile(r"\binformation_schema\.views\b", re.I),
-            "__information_schema_views",
-            query,
-        )
-        query = q
-        q = self._sub_outside_literals(
-            re.compile(r"\binformation_schema\.columns\b", re.I),
-            "__information_schema_columns",
-            query,
-        )
-        q = self._sub_outside_literals(
-            re.compile(r"\binformation_schema\.tables\b", re.I),
-            "__information_schema_tables",
-            q,
-        )
-        return self.spark.sql(q)
+        for rel in ("views", "columns", "tables"):
+            query = self._sub_outside_literals(
+                re.compile(rf"\binformation_schema\.{rel}\b", re.I),
+                f"__information_schema_{rel}",
+                query,
+            )
+        return self.spark.sql(query)
 
     @property
     def last_query_used_shortcut(self) -> bool:
-        """True if the most recent ``sql()`` call was answered by a
-        statistics rewrite instead of the vanilla plan — scan-free
+        """True if the most recent ``sql()`` call was not the vanilla
+        plan over the registered view: a scan-free statistics answer
         (A7/A8, interior-only aggregates, grouped rollups: the analog
         of the reference's ``assert_no_zarr_exec`` plan shape) or a
-        statistics-pruned scan (boundary-slab aggregate assembly,
-        coordinate-leading top-k); :attr:`last_shortcut_kind` says
-        which."""
+        pruned scan (boundary-slab aggregate assembly, coordinate-leading
+        top-k, a statement over its own window-narrowing relations);
+        :attr:`last_shortcut_kind` says which."""
         return self._last_shortcut_kind is not None
 
     @property

@@ -13,9 +13,11 @@ Spark-native rebuild of the reference's statistics machinery:
   from those statistics without any scan, the analog of the two custom
   DataFusion optimizer rules (``src/optimizer/count_optimization.rs``,
   ``src/optimizer/minmax_optimization.rs``).
-* ``agg_pushdown``, ``topk``, ``filter_rewrite`` — chunk-level
-  aggregates, top-k and filtered SELECTs answered from the sidecar or
-  from a fresh pruned scan.
+* ``agg_pushdown``, ``topk`` — chunk-level aggregates and top-k
+  answered from the sidecar, reading only boundary or tail slabs.
+* ``filter_rewrite`` — every other query statement over a registered
+  Zarr table, run as written over a fresh window-narrowing relation per
+  table reference.
 """
 
 from zarr_datafusion_spark.stats.parquet_stats import parquet_table_stats

@@ -1,86 +1,151 @@
-"""SQL-surface chunk-skipping for registered Zarr tables.
+"""One pruned relation per table reference: the SQL surface's chunk skipping.
 
-``register_zarr`` keeps its named view in the multi-query-safe LAZY
-mode (eager window narrowing bakes one query's pruned partitions into
-Spark's per-relation plan cache — ADVICE r9).  That safety choice
-would strand SQL users without chunk skipping entirely, so the engine
-instead rewrites each eligible statement onto a FRESH pruned relation:
+Spark 4.1 caches a Python source's planned partitions on the relation,
+so a registered view stays lazy (an eager one would replay a window to
+the next query, and to a second reference in a self-join).  For a query
+statement naming registered Zarr tables, :func:`try_filter_rewrite`
+finds each reference with Spark's own parser (``parseQuery`` offsets of
+every ``UnresolvedRelation``: joins, CTE bodies, subqueries), splices in
+a temp view over a fresh ``read_zarr(eager_pushdown=True)`` relation
+per reference, runs ``spark.sql`` and drops the views once analysis has
+fixed the plan.  Each relation narrows its windows to the filters Spark
+pushes into it (as the reference prunes every scan, ``filter.rs:70-302``)
+and Spark re-applies them all, so results equal the view's.  A subset
+statement reads only its columns; a plain filtered SELECT whose window
+the sidecar bounds below the split threshold is read on the driver
+(``read_zarr(filters=...)``), a job-free snapshot.  A reference stays
+on the view when a CTE shares its name, when it lies in a CTE body
+while some CTE is used twice (inlined, one relation would appear
+twice), or when the text at its offsets is not its name.
 
-    SELECT cols FROM t WHERE var > x AND coord BETWEEN a AND b
-
-becomes ``read_zarr(store, eager_pushdown=True,
-data_filter_pushdown=True).filter(pred).select(cols)`` — a new
-relation per query, so nothing cacheable survives to poison the next
-statement, while the scan skips every chunk row the coordinate windows
-and the per-chunk-row data statistics prove empty.  Results are
-identical to the view's by the Inexact contract: Spark re-applies the
-full predicate; pruning only ever removes provably-empty chunk rows
-(NaN-is-largest rules included — they live in the source pruner).
-
-When the pruned window is small, the driver reads it itself.  The
-chunk-stats sidecar bounds the window first: the rows of the outer
-chunk rows that the outer-coordinate conjuncts cannot rule out.  Below
-the reader's split threshold (one partition at any parallelism) the
-rewrite hands ``read_zarr`` the filters Spark would push
-(``read_zarr(filters=...)``); the driver then plans the window with the
-source's own reader and, if it still plans below the threshold, reads
-it as a ``LocalRelation``.  Catalyst folds the re-applied filter and
-projection into it, so collecting the answer runs no Spark job and no
-Python worker.  Such an answer is a snapshot of the store taken at
-``Engine.sql`` time, where a distributed relation reads the chunk
-files when an action runs.  A bigger window, by the sidecar bound or
-by the plan, keeps the distributed pruned scan, and the sidecar bound
-keeps the driver from planning a window it would not read.  Either way
-each read opens only the arrays the statement references
-(``read_zarr(columns=...)``).
-
-Guards: plain column projection, a WHERE of parsed conjuncts
-(:mod:`~zarr_datafusion_spark.stats.statement`; every column in the
-table schema), no GROUP BY / ORDER BY / LIMIT (those routes belong to
-the aggregate and top-k rewrites).
+Reuse: Spark replays a relation's cached windows to a later plan that
+pushes no filter, so a relation whose statement has no conjunct Spark
+is known to push carries an always-true filter that it does:
+``coord >= <exact stored minimum>`` (NaN sorts above every number, so
+NaN rows pass), or ``var IS NOT NULL`` on a data variable the WHERE
+already compares.
 """
 
 from __future__ import annotations
 
+import re
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, TimestampType
 
-from zarr_datafusion_spark.stats.statement import (
-    classify,
-    predicate,
-    pushed_filters,
-)
+from zarr_datafusion_spark.local_relation import _epoch_us
+from zarr_datafusion_spark.stats.statement import classify, pushed_filters
+
+_SELECT = re.compile(r"\bselect\b", re.I)
 
 
 def try_filter_rewrite(
-    spark: SparkSession, stmt, schema: dict, store: str
+    spark: SparkSession, query: str, tables: dict, fold=str, stmt=None, schema=None
 ) -> DataFrame | None:
-    """Rewrite an eligible filtered SELECT onto a fresh pruned scan, or
-    return ``None`` (the registered lazy view answers)."""
-    if (
-        stmt.where is None
-        or stmt.group is not None
-        or stmt.order
-        or stmt.limit is not None
-    ):
+    """``query`` run over a fresh relation per reference to a table in
+    ``tables`` (keyed by ``fold``ed name, as Spark resolves names), or
+    ``None`` when nothing binds.  ``stmt``/``schema``: the statement's
+    subset parse and its table's column types, if it has them."""
+    refs = _references(spark, query, tables, fold)
+    if not refs:
         return None
-    cols = stmt.columns(schema)
-    if cols is None or any(c not in schema for c, _, _ in stmt.where):
+    views, text = [], query
+    try:
+        for start, stop, aliased, table in sorted(refs, reverse=True):
+            views.append(f"__zds_ref_{uuid.uuid4().hex}")
+            _relation(spark, table, stmt, schema).createOrReplaceTempView(views[-1])
+            alias = "" if aliased else f" AS {query[start : stop + 1]}"
+            text = f"{text[:start]}{views[-1]}{alias}{text[stop + 1 :]}"
+        out = spark.sql(text)
+        out._zds_shortcut_kind = "pruned"
+        return out
+    except Exception:  # the caller runs the user's own text
         return None
+    finally:
+        for view in views:
+            spark.catalog.dropTempView(view)
 
+
+def _references(spark, query: str, tables: dict, fold) -> list:
+    """``(start, stop, aliased, table)`` per bindable reference; none for
+    a command, unparsable text, or a statement with no filter or join."""
+    try:
+        root = spark._jsparkSession.sessionState().sqlParser().parseQuery(query)
+    except Exception:  # a command (CREATE VIEW, INSERT, EXPLAIN, ...)
+        return []
+    # a subquery has a SELECT of its own (a missed one stays on the view)
+    nested = len(_SELECT.findall(query)) > 1
+    found, uses, ctes, narrows = [], {}, set(), False
+    stack = [(root, False, None)]
+    while stack:
+        node, aliased, cte = stack.pop()
+        kind = node.nodeName()
+        narrows = narrows or kind in ("Filter", "Join")
+        if kind == "UnresolvedRelation":
+            name = fold(node.tableName())  # quoted when not a plain name
+            uses[name] = uses.get(name, 0) + 1
+            if name in tables:
+                found.append((name, node.origin(), aliased, cte))
+            continue
+        if kind == "UnresolvedWith":
+            defs = node.cteRelations()
+            for i in range(defs.size()):
+                pair = defs.apply(i)
+                ctes.add(fold(pair._1()))
+                stack.append((pair._2(), False, fold(pair._1())))
+        children = node.children()
+        for i in range(children.size()):
+            stack.append((children.apply(i), kind == "SubqueryAlias", cte))
+        if nested and kind != "SubqueryAlias":
+            subqueries = node.subqueries()
+            for i in range(subqueries.size()):
+                stack.append((subqueries.apply(i), False, cte))
+    if not narrows:
+        return []
+    shared = any(uses.get(c, 0) > 1 for c in ctes)
+    out = []
+    for name, origin, aliased, cte in found:
+        table = tables[name]
+        if not table.bounds or name in ctes or (cte is not None and shared):
+            continue
+        start, stop = origin.startIndex().get(), origin.stopIndex().get()
+        if fold(query[start : stop + 1].strip("`")) == name:
+            out.append((start, stop, aliased, table))
+    return out
+
+
+def _relation(spark, table, stmt, schema) -> DataFrame:
+    """A fresh window-narrowing relation over ``table``'s store."""
     from zarr_datafusion_spark.zarr import read_zarr
 
+    cols, filters, pushed = table.schema.names, None, []
+    if stmt is not None:
+        cols, pushed = stmt.referenced(schema), pushed_filters(stmt.where, schema)
+        plain = stmt.columns(schema) is not None and not (
+            stmt.group or stmt.order or stmt.limit is not None
+        )  # an aggregate's float sums depend on how the scan splits
+        if table.sidecar and plain:
+            filters = _driver_filters(spark, stmt, schema, table.store)
     df = read_zarr(
-        spark,
-        store,
-        columns=stmt.referenced(schema),
-        eager_pushdown=True,
-        data_filter_pushdown=True,
-        filters=_driver_filters(spark, stmt, schema, store),
+        spark, table.store, columns=cols, eager_pushdown=True,
+        data_filter_pushdown=table.sidecar, filters=filters,
+        chunk_cache_mb=table.chunk_cache_mb, prefetch=table.prefetch,
+        _schema=StructType([table.schema[c] for c in cols]),
     )
-    out = df.filter(predicate(stmt.where)).select(*cols)
-    out._zds_shortcut_kind = "pruned"
-    return out
+    if pushed:  # every later plan over the result pushes these
+        return df
+    # else an always-true filter that every later plan pushes
+    coord = next((c for c in cols if c in table.bounds), None)
+    if coord is None:  # the WHERE names only data variables
+        return df.filter(F.col(stmt.where[0][0]).isNotNull())
+    lo, dtype = table.bounds[coord], table.schema[coord].dataType
+    if isinstance(dtype, TimestampType):
+        bound = F.timestamp_micros(F.lit(_epoch_us(lo)))
+    else:
+        bound = F.lit(lo).cast(dtype)
+    return df.filter(F.col(coord) >= bound)
 
 
 def _driver_filters(spark, stmt, schema: dict, store: str) -> list | None:
@@ -111,58 +176,5 @@ def _driver_filters(spark, stmt, schema: dict, store: str) -> list | None:
     return pushed_filters(stmt.where, schema)
 
 
-def try_pruned_agg_rewrite(
-    spark: SparkSession, stmt, schema: dict, store: str
-) -> DataFrame | None:
-    """Aggregates the statistics assembly could NOT answer (float
-    variables, data-variable predicates, unsorted coordinates with a
-    window, grouped forms over multi-index chunks) still deserve the
-    pruned SCAN: rewrite ``SELECT aggs FROM t WHERE conjuncts [GROUP BY
-    col]`` onto a fresh chunk-skipping relation and let Spark compute
-    the aggregate itself.  Values are trivially identical to the lazy
-    view's (same engine, same full predicate re-applied — only the
-    provably-empty chunk reads disappear), so this rewrite has no
-    float/NaN/overflow policy to enforce; it runs LAST in the engine's
-    rewrite chain, after the scan-free paths had their chance."""
-    group = stmt.group
-    if stmt.where is None or stmt.order or stmt.limit is not None:
-        return None
-    if any(c not in schema for c, _, _ in stmt.where):
-        return None
-    if group is not None and group not in schema:
-        return None
-
-    aggs = []
-    out_names = []  # statement item order — the output column order
-    for item in stmt.items:
-        fn, arg = item.fn, item.arg
-        if group is not None and (fn, arg, item.alias) == (None, group, None):
-            out_names.append(group)
-            continue
-        if fn is None:
-            return None
-        if fn == "count" and arg in ("*", "1"):
-            agg = F.count(F.lit(1))
-        elif arg not in schema:
-            return None
-        else:
-            agg = getattr(F, fn)(arg)
-        aggs.append(agg.alias(item.name))
-        out_names.append(item.name)
-    if not aggs or len(set(out_names)) != len(out_names):
-        return None
-
-    from zarr_datafusion_spark.zarr import read_zarr
-
-    df = read_zarr(
-        spark,
-        store,
-        columns=stmt.referenced(schema),
-        eager_pushdown=True,
-        data_filter_pushdown=True,
-    )
-    df = df.filter(predicate(stmt.where))
-    base = df.groupBy(group).agg(*aggs) if group is not None else df.agg(*aggs)
-    out = base.select(*out_names)  # statement item order
-    out._zds_shortcut_kind = "pruned"
-    return out
+# kept only because ``perfbench/layers.py`` TARGETS resolves this name
+try_pruned_agg_rewrite = try_filter_rewrite

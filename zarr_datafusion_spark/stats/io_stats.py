@@ -213,17 +213,6 @@ def plan_scan_stats(
 # ---------------------------------------------------------------------------
 
 
-def count_unpruned_eager_plans(stats_dir: str) -> int:
-    """Number of planning passes an ``eager_pushdown`` reader ran with
-    NO pushed coord filters (``plan-unpruned-*.json`` markers written by
-    ``ZarrDataSourceReader.partitions``).  Nonzero for a query expected
-    to prune means the A5 pushdown was lost — e.g. a re-plan after the
-    per-query filter reset — which stays result-correct under the
-    Inexact contract but silently reverts to a full scan (ADVICE r4:
-    make the loss observable in io_stats, not just in wall-clock)."""
-    return len(glob.glob(os.path.join(stats_dir, "plan-unpruned-*.json")))
-
-
 def collect_stats_dir(stats_dir: str) -> ZarrIoStats:
     """Sum the per-partition counter JSONs written by the zarr source
     when the ``stats_dir`` option is set (one file per input partition,

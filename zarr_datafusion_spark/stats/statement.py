@@ -8,9 +8,9 @@ Items are ``*``, bare columns, or ``count|min|max|sum|avg`` over ``*``,
 ``col <op> number`` (``<op>`` one of ``< <= > >= =``) and ``col BETWEEN
 a AND b``, which is kept as its two bounds.  Keywords are
 case-insensitive, identifiers are not.  Anything else (joins, OR,
-parentheses, string literals, expressions) does not parse, and
-``Engine.sql`` hands the statement to Spark untouched.  Each rewrite
-decides from the parsed :class:`Statement` whether it fires.
+parentheses, string literals, expressions) does not parse, and skips
+the statistics answers.  Each rewrite decides from the parsed
+:class:`Statement` whether it fires.
 
 Numeric literals are typed the way Spark SQL types them, so a rewrite
 compares exactly what the plain plan compares:
@@ -132,14 +132,15 @@ class Statement:
     def referenced(self, schema) -> list[str]:
         """The ``schema`` columns the statement names anywhere (select
         items and aggregate arguments, conjuncts, GROUP BY and ORDER BY
-        keys), in table order; all of them under ``SELECT *``.  A
-        rewrite's fresh relation reads only these."""
-        if any(i.fn is None and i.arg == "*" for i in self.items):
+        keys), in table order; all of them under ``SELECT *`` or when it
+        names a column ``schema`` lacks (Spark may resolve that name in
+        another case).  A statement's fresh relation reads only these."""
+        names = {i.arg for i in self.items} | {c for c, _ in self.order}
+        names |= {c for c, _, _ in self.where or ()} | {self.group}
+        names -= {"*", "1", None}
+        star = any(i.fn is None and i.arg == "*" for i in self.items)
+        if star or not names <= set(schema):
             return list(schema)
-        names = {i.arg for i in self.items}
-        names.update(c for c, _, _ in self.where or ())
-        names.update(c for c, _ in self.order)
-        names.add(self.group)
         return [c for c in schema if c in names]
 
 

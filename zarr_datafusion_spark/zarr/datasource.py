@@ -579,30 +579,6 @@ class ZarrDataSourceReader(DataSourceReader):
         import itertools
         import math
 
-        # Lost-pushdown observability (ADVICE r4): an eager reader
-        # planning with EMPTY coord_filters is either a genuinely
-        # unfiltered query or a pushdown lost to a re-plan (e.g. a
-        # second partitions() call after the consume-and-clear below) —
-        # results stay correct under the Inexact contract either way,
-        # but the A5 I/O reduction would vanish silently.  Spill a
-        # marker per such planning pass so io_stats can surface it
-        # (``count_unpruned_eager_plans``) instead of leaving the only
-        # evidence a slow scan.
-        if (
-            self.eager_pushdown
-            and not self.coord_filters
-            and not self.coord_ranges
-            and self.stats_dir
-        ):
-            self._unpruned_plans = getattr(self, "_unpruned_plans", 0) + 1
-            marker = os.path.join(
-                self.stats_dir,
-                f"plan-unpruned-{os.getpid()}-{self._unpruned_plans}.json",
-            )
-            os.makedirs(self.stats_dir, exist_ok=True)
-            with open(marker, "w") as f:
-                json.dump({"unpruned_eager_plans": 1}, f)
-
         windows = self._windows()
         # Consume-and-clear the pushed filters: Spark reuses this ONE
         # reader instance for every query planned from the same
@@ -1025,6 +1001,8 @@ def read_zarr(
     chunk_cache_mb: int = 0,
     prefetch: int = 0,
     filters: list[Filter] | None = None,
+    *,
+    _schema: StructType | None = None,
 ) -> DataFrame:
     """Flattened DataFrame over a Zarr store (engine API analog of the
     reference's ``register_table`` example path, EP2).
@@ -1088,6 +1066,10 @@ def read_zarr(
     included) and returns the rows as a ``LocalRelation``: a snapshot
     taken now, which collects with no Spark job and no Python worker.
     A bigger window returns the usual distributed relation.
+
+    ``_schema`` is internal: the engine passes the schema of the
+    columns it already knows from registration, so Spark skips the
+    source's ``schema()`` call (store discovery in a Python worker).
     """
     if store_path.startswith("icechunk://"):
         # pin a mutable branch ref to its snapshot id NOW, so the plan
@@ -1137,7 +1119,10 @@ def read_zarr(
         local = _read_on_driver(spark, {**options, "path": store_path}, filters)
         if local is not None:
             return local
-    return spark.read.format("zarr").options(**options).load(store_path)
+    reader = spark.read.format("zarr")
+    if _schema is not None:
+        reader = reader.schema(_schema)
+    return reader.options(**options).load(store_path)
 
 
 def _read_on_driver(

@@ -216,26 +216,33 @@ def normalize_store_path(store_path: str) -> str:
 
 def detect_zarr_version(store_path: str) -> int:
     fs, store_path = store_fs(normalize_store_path(store_path))
-    root_v3 = os.path.join(store_path, "zarr.json")
-    if fs.exists(root_v3):
-        return 3
-    if (
-        fs.exists(os.path.join(store_path, ".zgroup"))
-        or fs.exists(os.path.join(store_path, ".zarray"))
-        or fs.exists(os.path.join(store_path, ".zmetadata"))
-    ):
-        return 2
+    return _detect(fs, store_path)[0]
+
+
+def _detect(fs, store_path: str) -> tuple[int, bytes | None]:
+    """``(zarr version, root document)``: the root ``zarr.json`` (v3)
+    or ``.zmetadata`` (v2 consolidated) bytes, else None.  Each probe is
+    one ``try_read_bytes`` (on an object store one GET, no HEAD or
+    listing)."""
+
+    def read(*parts):
+        return fs.try_read_bytes(os.path.join(store_path, *parts))
+
+    for version, name in ((3, "zarr.json"), (2, ".zmetadata")):
+        root = read(name)
+        if root is not None:
+            return version, root
+    if read(".zgroup") is not None or read(".zarray") is not None:
+        return 2, None
     # Probe subdirectories (stores without root group metadata)
     try:
-        for entry in sorted(fs.listdir(store_path)):
-            sub = os.path.join(store_path, entry)
-            if fs.isdir(sub):
-                if fs.exists(os.path.join(sub, "zarr.json")):
-                    return 3
-                if fs.exists(os.path.join(sub, ".zarray")):
-                    return 2
+        entries = sorted(fs.listdir(store_path))
     except FileNotFoundError:
         raise FileNotFoundError(f"Zarr store not found: {store_path}")
+    for entry in entries:
+        for version, name in ((3, "zarr.json"), (2, ".zarray")):
+            if read(entry, name) is not None:
+                return version, None
     raise ValueError(f"not a Zarr v2 or v3 store: {store_path}")
 
 
@@ -352,18 +359,14 @@ def _infer_coord_order(
     return coords
 
 
-def _arrays_from_consolidated(fs, store_path: str) -> list[ZarrArrayMeta] | None:
+def _arrays_from_consolidated(raw: bytes) -> list[ZarrArrayMeta] | None:
     """Zarr v2 consolidated metadata: a root ``.zmetadata`` file holds
     every ``.zarray``/``.zattrs`` document, so discovery is ONE read
     instead of one per array — the difference between milliseconds and
     seconds of round-trips on an object store.  Returns None when the
-    file is absent/unusable (fall back to directory walking)."""
-    path = os.path.join(store_path, ".zmetadata")
-    if not fs.exists(path):
-        return None
+    document is unusable (fall back to directory walking)."""
     try:
-        doc = json.loads(fs.read_text(path))
-        entries = doc["metadata"]
+        entries = json.loads(raw)["metadata"]
     except Exception:
         return None
     arrays: list[ZarrArrayMeta] = []
@@ -378,21 +381,18 @@ def _arrays_from_consolidated(fs, store_path: str) -> list[ZarrArrayMeta] | None
     return arrays or None
 
 
-def _arrays_from_v3_consolidated(fs, store_path: str) -> list[ZarrArrayMeta] | None:
+def _arrays_from_v3_consolidated(raw: bytes) -> list[ZarrArrayMeta] | None:
     """Zarr v3 consolidated metadata: the root group's ``zarr.json``
     may embed every child node's metadata under
     ``consolidated_metadata.metadata`` (the zarr-python v3 convention
     that replaces v2's ``.zmetadata``), so discovery is the SAME single
     read that already fetched the root document — zero per-array
     round-trips, the layout remote stores should use with the http(s)
-    adapter.  Returns None when absent/unusable (fall back to
-    directory walking).  Beyond the reference, which consolidates v2
-    only (``schema_inference.rs`` reads per-array metadata for v3)."""
-    path = os.path.join(store_path, "zarr.json")
-    if not fs.exists(path):
-        return None
+    adapter.  Returns None when unusable (fall back to directory
+    walking).  Beyond the reference, which consolidates v2 only
+    (``schema_inference.rs`` reads per-array metadata for v3)."""
     try:
-        doc = json.loads(fs.read_text(path))
+        doc = json.loads(raw)
         if doc.get("node_type") != "group":
             return None
         entries = doc["consolidated_metadata"]["metadata"]
@@ -415,39 +415,35 @@ def discover_arrays(store_path: str) -> ZarrStoreMeta:
     from zarr_datafusion_spark.zarr.chunkio import read_array
 
     fs, store_path = store_fs(normalize_store_path(store_path))
-    version = detect_zarr_version(store_path)
+    version, root = _detect(fs, store_path)
     arrays: list[ZarrArrayMeta] | None = None
-    if version == 2:
-        arrays = _arrays_from_consolidated(fs, store_path)
-    elif version == 3:
-        arrays = _arrays_from_v3_consolidated(fs, store_path)
+    if root is not None:
+        arrays = (
+            _arrays_from_consolidated(root)
+            if version == 2
+            else _arrays_from_v3_consolidated(root)
+        )
     if arrays is None:
         arrays = []
         for entry in sorted(fs.listdir(store_path)):
             sub = os.path.join(store_path, entry)
-            if not fs.isdir(sub):
+            # a file entry reads as absent here (NotADirectory / 404)
+            raw = fs.try_read_bytes(
+                os.path.join(sub, ".zarray" if version == 2 else "zarr.json")
+            )
+            if raw is None:
                 continue
-            if version == 2:
-                zarray = os.path.join(sub, ".zarray")
-                if fs.exists(zarray):
-                    zattrs = os.path.join(sub, ".zattrs")
-                    attrs = None
-                    if fs.exists(zattrs):
-                        try:
-                            attrs = json.loads(fs.read_text(zattrs))
-                        except Exception:
-                            attrs = None  # malformed attrs never block a scan
-                    arrays.append(
-                        _parse_v2_array(
-                            entry, json.loads(fs.read_text(zarray)), attrs
-                        )
-                    )
-            else:
-                zjson = os.path.join(sub, "zarr.json")
-                if fs.exists(zjson):
-                    meta = json.loads(fs.read_text(zjson))
-                    if meta.get("node_type") == "array":
-                        arrays.append(_parse_v3_array(entry, meta))
+            meta = json.loads(raw)
+            if version == 3:
+                if meta.get("node_type") == "array":
+                    arrays.append(_parse_v3_array(entry, meta))
+                continue
+            attrs = fs.try_read_bytes(os.path.join(sub, ".zattrs"))
+            try:
+                attrs = None if attrs is None else json.loads(attrs)
+            except ValueError:
+                attrs = None  # malformed attrs never block a scan
+            arrays.append(_parse_v2_array(entry, meta, attrs))
 
     coords = [a for a in arrays if a.is_coordinate]
     data_vars = sorted(
