@@ -271,35 +271,39 @@ def test_rollup_avg_overflow_defers_to_full_plan(spark, tmp_path):
 
 def test_bail_shapes_fall_through(agg_engine, spark):
     """Shapes outside every statistics rewrite's contract answer as
-    Spark does: with a WHERE they run over the statement's own pruned
-    relation, without one on the view: unfiltered GROUP BY, OR
-    disjunctions, parenthesised predicates, string literals."""
-    for sql, rows in [
-        ("SELECT time, SUM(pressure) AS s FROM tc GROUP BY time", 12),
-        ("SELECT SUM(pressure) AS s FROM tc WHERE time >= 2 OR time <= 1", 1),
-        ("SELECT SUM(pressure) AS s FROM tc WHERE (time >= 2)", 1),
+    Spark does: with a WHERE that narrows a window they run over the
+    statement's own pruned relation, otherwise on the view: unfiltered
+    GROUP BY, OR disjunctions, string literals."""
+    for sql, rows, kind in [
+        ("SELECT time, SUM(pressure) AS s FROM tc GROUP BY time", 12, None),
+        ("SELECT SUM(pressure) AS s FROM tc WHERE time >= 2 OR time <= 1", 1,
+         None),
+        ("SELECT SUM(pressure) AS s FROM tc WHERE (time >= 2)", 1, "pruned"),
         # QUOTED literal: every rewrite's conjunct grammar is numeric-
         # only, so a string literal must decline to Spark (which casts
         # '2' and answers identically) — the literal-safety twin of the
         # r13 Engine.sql fuzz, applied to the pruning rewrites
-        ("SELECT SUM(pressure) AS s FROM tc WHERE time = '2'", 1),
-        # clause combinations no rewrite serves
+        ("SELECT SUM(pressure) AS s FROM tc WHERE time = '2'", 1, None),
+        # clause combinations no statistics rewrite serves
         ("SELECT time, pressure FROM tc WHERE time >= 2 "
-         "ORDER BY time DESC, lat, lon LIMIT 5", 5),
-        ("SELECT time, lat, SUM(pressure) AS s FROM tc GROUP BY time, lat", 120),
+         "ORDER BY time DESC, lat, lon LIMIT 5", 5, "pruned"),
+        ("SELECT time, lat, SUM(pressure) AS s FROM tc GROUP BY time, lat", 120,
+         None),
         ("SELECT time, lat, SUM(pressure) AS s FROM tc WHERE time >= 2 "
-         "GROUP BY time, lat", 100),
+         "GROUP BY time, lat", 100, "pruned"),
         ("SELECT time, SUM(pressure) AS s FROM tc WHERE time >= 2 "
-         "GROUP BY time ORDER BY time", 10),
-        ("SELECT time AS t2 FROM tc WHERE time >= 11 AND lat = 0", 14),
+         "GROUP BY time ORDER BY time", 10, "pruned"),
+        ("SELECT time AS t2 FROM tc WHERE time >= 11 AND lat = 0", 14, "pruned"),
     ]:
         df = agg_engine.sql(sql)
-        kind = "pruned" if "WHERE" in sql else None
         assert agg_engine.last_shortcut_kind == kind, sql
         got = df.collect()
         assert len(got) == rows
-        # no ORDER BY fixes the row order of the unsorted shapes
-        assert sorted(got) == sorted(spark.sql(sql).collect())
+        want = spark.sql(sql).collect()
+        if "ORDER BY" in sql:  # a total order: the rows come in it
+            assert got == want, sql
+        else:
+            assert sorted(got) == sorted(want), sql
 
 
 @pytest.mark.parametrize(
@@ -476,9 +480,9 @@ def test_shortcut_kind_accounting(agg_engine):
 def test_one_schema_lookup_per_statement(agg_engine, spark, monkeypatch):
     """``Engine.sql`` parses a statement once and takes a Zarr table's
     schema from its registration, so no statement looks a schema up; a
-    statement over a table without statistics makes no sidecar lookup
-    either, and one outside the subset or declined by the statistics
-    answers checks the sidecar for its own relation."""
+    statement over a table without statistics, or one that narrows no
+    window, makes no sidecar lookup either, and one declined by the
+    statistics answers checks the sidecar for its own relation."""
     from zarr_datafusion_spark.stats import chunk_stats
 
     tables, sidecars = [], []
@@ -493,7 +497,7 @@ def test_one_schema_lookup_per_statement(agg_engine, spark, monkeypatch):
         for sql, lookups in [
             ("SELECT COUNT(*) AS n FROM tc_nostats", (0, 0)),
             ("SELECT SUM(pressure) AS s FROM tc WHERE time >= 2 OR time <= 1",
-             (0, 1)),
+             (0, 0)),
             # declined by every statistics rewrite
             ("SELECT time, SUM(pressure) AS s FROM tc WHERE lat < 3 GROUP BY time",
              (0, 1)),
@@ -586,14 +590,10 @@ def test_sql_filter_rewrite_prunes_and_matches(spark, tmp_path, monkeypatch):
     # the named view itself stays lazy and multi-query-safe
     assert spark.sql("SELECT COUNT(*) AS n FROM tr_fr").collect()[0].n == 1680
 
-    # a shape outside the subset runs over its own relation too;
-    # Spark pushes no OR to a Python source, so it reads every slab
+    # non-rewritable shapes answer through the view, correctly
     odd = "SELECT time, pressure FROM tr_fr WHERE pressure >= 1075 OR lat > 2"
-    shutil.rmtree(sd, ignore_errors=True)
-    odd_rows = sorted(map(tuple, e.sql(odd).collect()))
-    assert e.last_shortcut_kind == "pruned"
-    assert collect_stats_dir(sd).rows == 1680
-    assert odd_rows == sorted(map(tuple, spark.sql(odd).collect()))
+    e.sql(odd)
+    assert not e.last_query_used_shortcut
 
 
 def test_pruned_agg_rewrite(spark, tmp_path, monkeypatch):
@@ -1108,24 +1108,103 @@ def test_table_without_chunk_stats_prunes(spark, tmp_path, monkeypatch):
 
 
 @pytest.mark.parametrize(
-    "sql",
+    "sql, where",
     [
-        "SELECT * FROM series",
-        "SELECT a.time, a.lat, a.lon, b.v FROM series a JOIN series b "
-        "ON a.time = b.time AND a.lat = b.lat AND a.lon = b.lon",
+        ("SELECT * FROM series WHERE time < 8", "time = 3"),
+        # no conjunct known to be pushed as written: the relation reads
+        # a coordinate for its always-true filter
+        ("SELECT v FROM series WHERE v > 2.5", "v = 7"),
+        # Spark pushes no filter of the statement into b's relation
+        ("SELECT a.v AS av, b.* FROM series a CROSS JOIN series b "
+         "WHERE a.time = 1 AND a.lat = 0 AND a.lon = 0", "time = 3"),
     ],
 )
-def test_reused_result_is_planned_again(spark, ref_store, sql):
+def test_reused_result_is_planned_again(spark, ref_store, sql, where):
     """A returned DataFrame planned twice, first filtered and then not,
     answers both times as the view does: a bound relation always
     pushes a filter, so Spark never replays its first window."""
     from zarr_datafusion_spark.engine import Engine
 
     e = Engine(spark)
-    e.register_zarr("series", ref_store)
+    e.register_zarr("series", ref_store, data_filter_pushdown=True)
     df, view = e.sql(sql), spark.sql(sql)
-    assert df.filter("time = 3").count() == view.filter("time = 3").count()
-    assert df.count() == view.count() == 32 * 64 * 128
+    assert e.last_shortcut_kind == "pruned"
+    assert df.filter(where).count() == view.filter(where).count()
+    assert df.count() == view.count() > 64 * 128
+
+
+def test_result_used_twice_in_one_plan(spark, ref_store):
+    """A returned DataFrame joined or unioned with itself answers as the
+    view does: its relation narrows only while every scan of it pushes
+    the same filters.  So does a CTE used twice."""
+    from zarr_datafusion_spark.engine import Engine
+
+    e = Engine(spark)
+    e.register_zarr("series", ref_store)
+    sql = "SELECT * FROM series WHERE time < 8"
+    df, view = e.sql(sql), spark.sql(sql)
+    assert e.last_shortcut_kind == "pruned"
+
+    def shapes(d):
+        one, three = d.filter("time = 1"), d.filter("time = 3")
+        return [
+            one.join(three, ["lat", "lon"]).count(),
+            one.union(three).count(),
+            one.union(three).union(one).count(),
+        ]
+
+    assert shapes(df) == shapes(view) == [64 * 128, 2 * 64 * 128, 3 * 64 * 128]
+    cte = (
+        "WITH w AS (SELECT * FROM series WHERE time < 8) SELECT COUNT(*) AS n "
+        "FROM w a JOIN w b ON a.lat = b.lat AND a.lon = b.lon "
+        "WHERE a.time = 1 AND b.time = 3"
+    )
+    assert e.sql(cte).collect() == spark.sql(cte).collect() == [(64 * 128,)]
+    assert e.last_shortcut_kind == "pruned"
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT COUNT(*) AS n FROM series WHERE time < 3 OR lat = 1",
+        "SELECT COUNT(*) AS n FROM series WHERE time = '2'",
+        "SELECT COUNT(*) AS n FROM series WHERE v > 500",  # no chunk stats
+        "SELECT COUNT(*) AS n FROM series a JOIN series b "
+        "ON a.time = b.time AND a.lat = b.lat AND a.lon = b.lon",
+    ],
+)
+def test_statement_that_cannot_narrow_runs_on_the_view(spark, ref_store, sql):
+    """A statement with no conjunct comparing a coordinate (or a data
+    variable with chunk statistics) with a number Spark pushes has no
+    window to narrow, so it runs on the view, as written."""
+    from zarr_datafusion_spark.engine import Engine
+
+    e = Engine(spark)
+    e.register_zarr("series", ref_store)
+    e.sql(sql)
+    assert e.last_shortcut_kind is None
+
+
+def test_cached_view_answers_from_its_cache(spark, ref_store):
+    """While a registered view is cached, a statement over it reads the
+    cache, as Spark's own plan would; once uncached it is bound again."""
+    from zarr_datafusion_spark.engine import Engine
+
+    e = Engine(spark)
+    e.register_zarr("series_c", ref_store)
+    sql = "SELECT COUNT(*) AS n, SUM(v) AS s FROM series_c WHERE time < 4"
+    want = e.sql(sql).collect()
+    assert e.last_shortcut_kind == "pruned"
+    e.sql("CACHE TABLE series_c")
+    try:
+        df = e.sql(sql)
+        assert e.last_shortcut_kind is None
+        assert "InMemoryRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+        assert df.collect() == want
+    finally:
+        e.sql("UNCACHE TABLE series_c")
+    e.sql(sql)
+    assert e.last_shortcut_kind == "pruned"
 
 
 def test_commands_and_errors_reach_spark_as_written(spark, ref_store, monkeypatch):

@@ -96,10 +96,14 @@ class Engine:
         ``CREATE EXTERNAL TABLE ... STORED AS ZARR``, ``src/datasource/factory.rs:19-65``).
 
         The view is lazy (safe) so no query's window is replayed for the
-        next, yet ``sql`` prunes: each query statement naming the table
-        runs over a fresh window-narrowing relation per reference
-        (:mod:`~zarr_datafusion_spark.stats.filter_rewrite`).  Plain
-        ``spark.sql`` over the view, and commands, scan every chunk.
+        next, yet ``sql`` prunes: a query statement naming the table
+        with a conjunct that narrows a window (a coordinate, or a data
+        variable with chunk statistics, compared with a number) runs
+        over a fresh window-narrowing relation per reference
+        (:mod:`~zarr_datafusion_spark.stats.filter_rewrite`).  Other
+        statements, commands, plain ``spark.sql``, and every statement
+        while the view is cached (``CACHE TABLE``) read through the
+        view: the cache, or every chunk.
 
         ``data_filter_pushdown=True`` also builds (once per store
         version, distributed, sidecar-cached) per-chunk-row statistics
@@ -337,7 +341,8 @@ class Engine:
         STORED AS ZARR`` spellings; statistics answers (reference rules
         ``count_optimization.rs:37-241``/``minmax_optimization.rs:43-239``
         plus chunk statistics); any other query statement naming a
-        registered Zarr table over a fresh pruned relation per reference
+        registered Zarr table that can narrow a window over a fresh
+        pruned relation per reference
         (:mod:`~zarr_datafusion_spark.stats.filter_rewrite`).  Commands
         go to Spark as written.  Table names match as Spark resolves them.
 
@@ -423,7 +428,10 @@ class Engine:
             if out is None and (stmt.where is None or table is None):
                 return self.spark.sql(query)  # nothing to prune
         if out is None:
-            # every reference gets its own window-narrowing relation
+            # every reference gets its own window-narrowing relation,
+            # but a cached view answers from its cache, as in Spark
+            if not self.spark._jsparkSession.sharedState().cacheManager().isEmpty():
+                zarr = {k: t for k, t in zarr.items() if not self._cached(k)}
             out = filter_rewrite.try_filter_rewrite(
                 self.spark, query, zarr, fold, stmt, schema
             )
@@ -433,6 +441,12 @@ class Engine:
         # relations DO read their pruned slabs
         self._last_shortcut_kind = getattr(out, "_zds_shortcut_kind", "scan_free")
         return out
+
+    def _cached(self, name: str) -> bool:
+        try:
+            return self.spark.catalog.isCached(name)
+        except Exception:  # a registered view the user dropped
+            return False
 
     #: a SQL single-quoted string literal ('' = escaped quote) — the
     #: rewrite below must never touch text inside one (ADVICE r6)

@@ -16,8 +16,8 @@ Spark-native rebuild of the reference's statistics machinery:
 * ``agg_pushdown``, ``topk`` — chunk-level aggregates and top-k
   answered from the sidecar, reading only boundary or tail slabs.
 * ``filter_rewrite`` — every other query statement over a registered
-  Zarr table, run as written over a fresh window-narrowing relation per
-  table reference.
+  Zarr table that can narrow a window, run as written over a fresh
+  window-narrowing relation per table reference.
 """
 
 from zarr_datafusion_spark.stats.parquet_stats import parquet_table_stats

@@ -35,6 +35,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import threading
 import zipfile
 from dataclasses import dataclass
 
@@ -189,6 +190,13 @@ class ZarrDataSourceReader(DataSourceReader):
         #: relations (read_zarr per query) opt in for the A5 I/O
         #: reduction.
         self.eager_pushdown = options.get("filter_pushdown", "safe") == "eager"
+        #: one file per eager relation (``read_zarr`` names it) holding
+        #: the filter state of its first planning pass: Spark keeps ONE
+        #: planned read per relation and every scan of the relation in
+        #: a plan (a DataFrame joined or unioned with itself) replays
+        #: the last one planned, so the relation narrows only while all
+        #: its passes push the same filters (see :func:`_same_window`)
+        self.window_key = options.get("window_key")
         #: decoded-chunk LRU budget per executor python worker, MiB
         #: (reference roadmap ``README.md:327``; 0 = off).  Off by
         #: default: the honest disk_bytes/n_chunks accounting and the
@@ -579,6 +587,13 @@ class ZarrDataSourceReader(DataSourceReader):
         import itertools
         import math
 
+        if self.window_key and not _same_window(
+            self.window_key,
+            repr([sorted(d.items()) for d in (
+                self.coord_filters, self.coord_ranges, self.data_ranges
+            )]),
+        ):
+            self.coord_filters, self.coord_ranges, self.data_ranges = {}, {}, {}
         windows = self._windows()
         # Consume-and-clear the pushed filters: Spark reuses this ONE
         # reader instance for every query planned from the same
@@ -973,6 +988,46 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
     sc._zarr_datafusion_spark_shipped = True
 
 
+def _same_window(path: str, state: str) -> bool:
+    """Whether a relation may narrow to ``state``, its pushed filters:
+    only while every planning pass of the relation (whose file is
+    ``path``) pushed the same ones.  The first pass records its state;
+    a pass with another marks the relation mixed, and a mixed relation
+    reads its full extent from then on, whatever it is pushed.  Any
+    replayed plan then covers every scan: scans that agree share one
+    window, and once they disagree the last plan is the full one."""
+    try:
+        fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o600)
+    except FileExistsError:
+        with open(path) as f:
+            if f.read() == state:
+                return True
+        with open(path, "w") as f:
+            f.write("mixed")
+        return False
+    with os.fdopen(fd, "w") as f:
+        f.write(state)
+    return True
+
+
+_WINDOW_DIR: list[str] = []
+_WINDOW_DIR_LOCK = threading.Lock()
+
+
+def _window_dir() -> str:
+    """This process's directory of eager relations' window files (the
+    driver plans every relation, in Python workers on its own host),
+    removed when the process exits."""
+    with _WINDOW_DIR_LOCK:
+        if not _WINDOW_DIR:
+            import atexit
+            import shutil
+
+            _WINDOW_DIR.append(tempfile.mkdtemp(prefix="zds_windows_"))
+            atexit.register(shutil.rmtree, _WINDOW_DIR[0], True)
+        return _WINDOW_DIR[0]
+
+
 def register_zarr_source(spark: SparkSession) -> None:
     """Register the 'zarr' format with a session (idempotent: a session
     that already has it keeps its registration, so repeated
@@ -1012,12 +1067,13 @@ def read_zarr(
     :func:`zarr_datafusion_spark.stats.io_stats.collect_stats_dir`.
 
     ``eager_pushdown``: enable coord-equality window narrowing (the A5
-    I/O reduction).  Only safe when the returned DataFrame serves ONE
-    query: Spark 4.1 caches planned partitions per relation and a
-    narrowed plan poisons later queries on the same DataFrame (see
-    ``ZarrDataSourceReader.eager_pushdown``).  Results are correct
-    either way — Spark re-applies every filter (Inexact contract) —
-    the flag only controls whether non-matching chunks are skipped.
+    I/O reduction).  Meant for a DataFrame that serves ONE query:
+    Spark 4.1 caches planned partitions per relation and replays them
+    to a later plan that pushes no filter (see
+    ``ZarrDataSourceReader.eager_pushdown``).  The relation narrows
+    only while every plan over it pushes the same filters, so a
+    DataFrame used twice in one plan (a self-join or self-union), or
+    re-planned with other filters, reads its full extent instead.
 
     ``data_filter_pushdown``: also skip chunk rows using per-chunk-row
     DATA-variable min/max statistics (computed distributed on first
@@ -1119,6 +1175,10 @@ def read_zarr(
         local = _read_on_driver(spark, {**options, "path": store_path}, filters)
         if local is not None:
             return local
+    if eager_pushdown:
+        import uuid
+
+        options["window_key"] = os.path.join(_window_dir(), uuid.uuid4().hex)
     reader = spark.read.format("zarr")
     if _schema is not None:
         reader = reader.schema(_schema)
