@@ -14,6 +14,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from zarr_datafusion_spark.parity import assert_frames_match  # noqa: E402,F401
+from zarr_datafusion_spark.session import jobs_launched  # noqa: E402,F401
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -218,24 +219,3 @@ def duck():
 def plan_text(df) -> str:
     """Physical-plan text (shared by plan-shape assertions)."""
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def jobs_launched(spark, fn) -> tuple:
-    """Run ``fn()`` under a fresh Spark job group and return ``(its
-    result, the ids of the jobs it launched)``.  The listener bus is
-    drained first, so a job that ran is never missed; the caller's job
-    group is restored afterwards."""
-    import uuid
-
-    sc = spark.sparkContext
-    keys = ("spark.jobGroup.id", "spark.job.description")
-    saved = [sc.getLocalProperty(k) for k in keys]
-    group = f"jobs-launched-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        for k, v in zip(keys, saved):
-            sc.setLocalProperty(k, v)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return result, sorted(sc.statusTracker().getJobIdsForGroup(group))

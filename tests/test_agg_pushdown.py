@@ -1163,6 +1163,39 @@ def test_result_used_twice_in_one_plan(spark, ref_store):
     assert e.last_shortcut_kind == "pruned"
 
 
+def test_failed_attempt_logs_only_the_users_error(spark, ref_store, capfd):
+    """A statement that fails analysis is re-run as written: stderr
+    carries only that run's error, never the internal attempt's, and
+    the raised error is Spark's own for the user's text."""
+    import logging
+
+    from pyspark.errors import AnalysisException
+    from pyspark.logger import PySparkLogger
+
+    from zarr_datafusion_spark.engine import Engine
+
+    e = Engine(spark)
+    e.register_zarr("series", ref_store, data_filter_pushdown=True)
+    sql = "SELECT nosuchcol FROM series WHERE time < 3"
+    records = []
+    handler = logging.Handler()
+    handler.emit = records.append
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    logger.addHandler(handler)
+    capfd.readouterr()
+    try:
+        with pytest.raises(AnalysisException) as got:
+            e.sql(sql)
+    finally:
+        logger.removeHandler(handler)
+    err = capfd.readouterr().err
+    with pytest.raises(AnalysisException) as want:
+        spark.sql(sql)
+    assert str(got.value) == str(want.value)
+    assert "__zds_ref_" not in err
+    assert [r.getMessage() for r in records] == [want.value.getMessage()]
+
+
 @pytest.mark.parametrize(
     "sql",
     [

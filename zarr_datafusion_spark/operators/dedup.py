@@ -35,7 +35,6 @@ its Arrow-vectorized per-batch UDF with hashlib-md5 token hashes.
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Callable
 
 import numpy as np
@@ -44,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zarr_datafusion_spark.operators.common import cpu_rebalance
+from zarr_datafusion_spark.session import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -60,12 +60,12 @@ def _q(name: str, oracle: str | None = None):
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    df = load_table(spark, sf_dir, "documents")
     return cpu_rebalance(spark, df)
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    df = load_table(spark, sf_dir, "embeddings")
     return cpu_rebalance(spark, df)
 
 
@@ -664,7 +664,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     # embeddings (NULL fold -> filtered); keep that contract explicit
     # so the grouped map never sees them
     e = (
-        spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "label", "embedding")
         .filter(
             F.col("vec_id").isNotNull()

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from zarr_datafusion_spark.operators.common import cpu_rebalance, salted_bucket
 from zarr_datafusion_spark.operators.dedup import _GRAMS_EXPR, jaccard_allpairs_oracle
+from zarr_datafusion_spark.session import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -95,7 +96,7 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact reference semantics that variant must reproduce.
     """
     docs = cpu_rebalance(
-        spark, spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        spark, load_table(spark, sf_dir, "documents")
     )
     bucket = salted_bucket("doc_id", ":split")
     split = (
@@ -160,7 +161,7 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagship agg; an empty cell is NULL on both engines.  Single
     shuffle: pivot compiles to one hash aggregate whose buffer holds
     all three conditional sums."""
-    o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    o = load_table(spark, sf_dir, "orders")
     piv = (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["O", "F", "P"])
@@ -456,7 +457,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle at all for the sampled OUTPUT — this entry aggregates per
     source only to make the oracle compact).
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     bucket = salted_bucket("doc_id", ":mix")
     rate = F.expr(_MIX_CASE)
     return (
@@ -500,7 +501,7 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``WindowGroupLimit`` below the Window node."""
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     n_tokens = F.expr(
         "CAST(size(split(lower(trim(text)), '\\\\s+')) AS BIGINT)"
     )
@@ -562,7 +563,7 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     max run of a sorted multiset == max frequency — so the oracle is
     unchanged.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
 
     def max_run(arr: str) -> str:
         # longest run in sorted(arr): fold carrying (prev, run, best)
@@ -656,7 +657,7 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     are restricted to the Java-regex/RE2 common subset (no backrefs or
     lookarounds) so results are engine-portable.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     aug = docs.select(
         "doc_id",
         F.concat(
@@ -739,7 +740,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
         "source",
@@ -810,7 +811,7 @@ def corpus_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE handles the delta being orders of magnitude smaller than the
     base (it plans the small side as broadcast when it fits).
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     delta = (
         docs.filter(F.col("doc_id") % 7 == 0)
         .select(
@@ -921,7 +922,7 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full corpus against the full batch.  All integer/bit ops stay
     in whole-stage codegen.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", F.expr(_FP_SPARK).alias("fingerprint"))
     newb = (
         base.filter(F.col("doc_id") % 5 == 0)
@@ -1019,7 +1020,7 @@ def quota_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":quota")))
     w = Window.partitionBy("lang").orderBy(key.asc(), F.col("doc_id").asc())
     return (
@@ -1086,7 +1087,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     on doc_id, which is skew-free (doc_id is unique-dense).  Counts are
     integers; the single final division is the only float op.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     bucket = salted_bucket("doc_id", ":split")
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test")
@@ -1178,7 +1179,7 @@ def embedding_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the generated expression is plain arithmetic over array elements —
     no UDF, no shuffle); column pruning reads only (vec_id, embedding).
     """
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = load_table(spark, sf_dir, "embeddings")
     return emb.select(
         "vec_id",
         *[
@@ -1235,8 +1236,6 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort over the raw event stream, no cross-event self-join
     explosion; AQE broadcasts the per-user stage tables when they fit.
     """
-    from zarr_datafusion_spark.session import load_table
-
     ev = load_table(spark, sf_dir, "events")
     v = (
         ev.filter(F.col("event_type") == "view")
@@ -1309,8 +1308,6 @@ def event_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-merge, no second shuffle) — the exact form here is the
     oracle-checkable reference semantics.
     """
-    from zarr_datafusion_spark.session import load_table
-
     ev = load_table(spark, sf_dir, "events")
     f = ev.groupBy("user_id").agg(F.min("ts").cast("date").alias("cohort_day"))
     j = ev.join(f, "user_id").withColumn(
@@ -1380,7 +1377,7 @@ def text_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     side here estimates ALL distinct tokens only because the fixture
     vocabulary is 31 tokens; production probes a candidate set.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token")
     )
@@ -1488,7 +1485,7 @@ def text_token_windows_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
 
     spark.udtf.register("zds_token_windows", TokenWindows)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("zds_udtf_docs")
     return spark.sql(
         """SELECT d.doc_id, t.win_idx, t.window_text
@@ -1544,8 +1541,6 @@ def event_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``streaming_window_counts``) and the stats table refreshes per
     trigger.
     """
-    from zarr_datafusion_spark.session import load_table
-
     ev = load_table(spark, sf_dir, "events")
     h = (
         ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hour_bucket"))
@@ -1599,10 +1594,10 @@ def scale_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from zarr_datafusion_spark.scale import salted_join
 
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity"
     )
-    part = spark.read.parquet(os.path.join(sf_dir, "part.parquet")).select(
+    part = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("l_partkey"), "p_brand"
     )
     joined = salted_join(li, part, "l_partkey", n_salt=8)
@@ -1640,7 +1635,7 @@ def scale_ranked_two_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from zarr_datafusion_spark.scale import ranked_two_pass
 
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
     return ranked_two_pass(
@@ -1690,11 +1685,11 @@ def scale_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the big table map-side, shrinking the join shuffle by the same
     factor.  Bitmap build is one aggregation over m/64 words.
     """
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity"
     )
     parts = (
-        spark.read.parquet(os.path.join(sf_dir, "part.parquet"))
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_size") < 10)
         .select("p_partkey", "p_brand")
     )
@@ -1788,7 +1783,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty), so single-token docs must short-circuit to array()
     explicitly — DuckDB's range(1, n) is empty there already.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     # bind-once + zip_with-over-slices: indexing element_at(split(...), i)
     # inside the lambda re-ran the split PER ELEMENT (O(tokens^2) splits
     # per doc — measured 7.9 s at sf0.1; this shape runs the split once
@@ -1848,7 +1843,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated map-side), one per-doc aggregate.  The corpus
     total is a 1-row broadcast, not a driver scalar.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token"),
@@ -1931,7 +1926,7 @@ def text_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the encode join) and the small parquet plans 1-2 scan partitions
     # — rebalance so both map stages use every core (guide §2.5).
     docs = cpu_rebalance(
-        spark, spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        spark, load_table(spark, sf_dir, "documents")
     )
     tok = docs.select(
         "doc_id",
@@ -2030,8 +2025,6 @@ def asof_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines, no rounding needed.  Ordering ties
     break on (ts_us, side, event_id) as in ``asof_join``.
     """
-    from zarr_datafusion_spark.session import load_table
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.unix_micros("ts").alias("ts_us"),
         "event_type", "value",
@@ -2117,7 +2110,7 @@ def data_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``scale.ranked_two_pass``) with no semantic change.  The summary
     aggregate rides the same partitioning.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     quota = (
         F.lit(_MIX_PER_WEIGHT)
         * ((F.substring("source", 4, 10).cast("int") % 4) + 1)
@@ -2169,7 +2162,7 @@ def _profile_numeric(spark: SparkSession, sf_dir: str, approx: bool) -> DataFram
     """Shared profile builder — see :func:`profile_numeric_columns`
     (exact, the oracle-checked registry entry) and
     :func:`profile_numeric_approx` (the benched headline)."""
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         *_PROFILE_COLS
     )
     nd = F.approx_count_distinct if approx else F.count_distinct
@@ -2279,8 +2272,6 @@ def event_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles (from, to, user) triples — bounded by users x k^2, and
     approx_count_distinct swaps in when even that is too wide).
     """
-    from zarr_datafusion_spark.session import load_table
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("ts_us")
     )
@@ -2354,7 +2345,7 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle of the corpus; this is exactly how distributed reservoir
     sampling is implemented when the sample must be weighted.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     h = (
         "CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), ':wsample')), 1, 8), 16, 10) AS BIGINT)"
     )
@@ -2433,7 +2424,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     left to Catalyst/AQE (never forced).  Scoring is map-side; the
     windowed top-k never leaves its doc partition.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term"),
@@ -2510,7 +2501,7 @@ def dedup_contamination_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = cpu_rebalance(
-        spark, spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        spark, load_table(spark, sf_dir, "documents")
     )
     bucket = salted_bucket("doc_id", ":split")
     bands = signature_bands(minhash_signatures(docs)).withColumn(
@@ -2598,7 +2589,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REGRESSED (1.01 -> 1.36 s at sf0.1, alternating best-of-3): the
     # three downstream consumers each shuffle right away, so widening
     # the scan only adds an exchange (the Q3/Q5 precedent).  Left alone.
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     # bind-once bigram structs: transform(array(split(..)), w -> ..)[1]
     bg_expr = (
         "element_at(transform(array(split(lower(trim(text)), '\\\\s+')), w -> "
@@ -2683,7 +2674,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — writers re-partition downstream if the index build needs
     locality by doc or by shard.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     last_idx = (
         f"greatest(CAST(ceil((length(text) - {_CHUNK_SIZE}) "
         f"/ {_CHUNK_STRIDE}.0) AS INT), 0)"
@@ -2753,7 +2744,7 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Postings are emitted as an ORDER-pinned string so the driver hash
     covers list order.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token"),
@@ -2848,7 +2839,7 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the DuckDB oracle recomputes every value bit-for-bit.
     """
     docs = cpu_rebalance(
-        spark, spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        spark, load_table(spark, sf_dir, "documents")
     )
     return exact_substring_report(docs)
 
@@ -2964,7 +2955,7 @@ def dedup_substring_winnowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     how many of its fingerprints also occur in another document.
     """
     docs = cpu_rebalance(
-        spark, spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        spark, load_table(spark, sf_dir, "documents")
     )
     return substring_winnowed_report(docs)
 
@@ -3172,7 +3163,7 @@ def dedup_cut_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaned strings.
     """
     docs = cpu_rebalance(
-        spark, spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        spark, load_table(spark, sf_dir, "documents")
     )
     return cut_duplicate_spans(docs)
 
@@ -3329,7 +3320,7 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and dl both hang off it).  The heavy-map entries (minhash
     signatures, shingle md5) keep theirs — measured 3-7x the other way.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("token"),
@@ -3456,7 +3447,7 @@ def build_bm25_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     )
     from zarr_datafusion_spark.operators.common import publish_dir_atomically
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         F.posexplode(F.split(F.lower(F.trim("text")), r"\s+")).alias(
@@ -3631,7 +3622,7 @@ def search_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from zarr_datafusion_spark.operators.similarity import QUERY_VEC_ID, _dot
 
-    e = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qe")
     )
@@ -3759,7 +3750,7 @@ def search_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zarr_datafusion_spark.operators.common import cpu_rebalance_over
 
     docs = cpu_rebalance_over(
-        spark, spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        spark, load_table(spark, sf_dir, "documents")
     )
     tok = docs.select(
         "doc_id",
@@ -3982,7 +3973,7 @@ def _incremental_postings(
         os.path.basename(ingest_dir),
     )
 
-    docs = spark.read.parquet(src)
+    docs = load_table(spark, sf_dir, "documents")
     if not os.path.exists(os.path.join(ingest_dir, "_SUCCESS")):
         # 4 ingest files (micro-batch granularity) + re-delivery of
         # every 7th doc: the at-least-once arrival the merge must absorb
@@ -4272,9 +4263,7 @@ def search_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.min("start").cast("bigint").alias("first_pos"))
     )
-    docs = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     lo = F.greatest(F.lit(1), F.col("first_pos").cast("int") - _SNIPPET_CTX)
     hi = F.col("first_pos").cast("int") + (len(_PHRASE) - 1 + _SNIPPET_CTX)
     # tokenize AFTER the join: only the hit set pays the split
@@ -4325,7 +4314,7 @@ def dedup_setsim_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs.  The small candidate/verify joins are left to AQE (no
     forced broadcasts of unbounded sides, round-6 rule).
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     return setsim_prefix_join(docs, SETSIM_PREFIX_THRESHOLD)
 
 
@@ -4543,8 +4532,6 @@ def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     both windows and the groupBy); per-task state is one carried row
     per window.  The user_id < 20 predicate is pushed to the scan.
     """
-    from zarr_datafusion_spark.session import load_table
-
     e = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") < 20)
@@ -4638,8 +4625,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the wedge join keys on the oriented source and the closure join on
     the (t1, t2) edge key.  All integers end-to-end.
     """
-    from zarr_datafusion_spark.session import load_table
-
     op = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
@@ -4740,8 +4725,6 @@ def profile_drift_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     no self-join of the table against itself per window, no second
     scan).  Output is bin-cardinality rows, independent of data size.
     """
-    from zarr_datafusion_spark.session import load_table
-
     e = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
@@ -5020,7 +5003,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from zarr_datafusion_spark.operators.similarity import _dot
 
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
     cands = (
         emb.filter(F.col("vec_id") != 0)
@@ -5358,7 +5341,7 @@ def chunk_cdc_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: the md5-per-char map branch is rebalanced INSIDE _cdc_core
     # (map branch only — see its comment); the entry passes the raw
     # scan.
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     return cdc_chunks_bounded(
         docs, _CDC_WINDOW, _CDC_DIVISOR, _CDC_MIN, _CDC_MAX
     )
@@ -5390,7 +5373,7 @@ def chunk_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # input-skew class; the r14 sf1 sweep's stage lines showed
     # "(1 + 1) / 2").  The rebalance lives INSIDE _cdc_core, applied
     # to the md5 map branch only (2.61 -> 0.74 s at sf0.1 all-in).
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     return cdc_chunks(docs, _CDC_WINDOW, _CDC_DIVISOR)
 
 
@@ -5567,7 +5550,7 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     this query never reads text at all; the classification algebra is
     identical.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 10 != 3).select(
         "doc_id", F.md5("text").alias("h")
     )
@@ -5647,8 +5630,6 @@ def graph_pagerank_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic fixed-point VARIANT, the float version at scale
     differs by < 1e-4 relative.
     """
-    from zarr_datafusion_spark.session import load_table
-
     op = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
@@ -5735,8 +5716,6 @@ def pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the window state is one running max per range and the
     driver handles range-count values, never data.
     """
-    from zarr_datafusion_spark.session import load_table
-
     part = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_size", "p_retailprice"
     )
@@ -5890,7 +5869,7 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     exhibit the error and would be dropped at scale.
     """
     docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        load_table(spark, sf_dir, "documents")
         .filter(F.col("source").isin(list(_KMV_SOURCES)))
     )
     g = (
@@ -6085,7 +6064,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     The companion :func:`bpe_apply_merges` returns the post-merge
     segmentation the same chain produces.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(
             F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w")
@@ -6200,7 +6179,7 @@ def bpe_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle CTEs; only the final SELECT differs), so the two entries
     cross-check each other: a wrong merge adoption OR a wrong greedy
     application shows up in BOTH hashes."""
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(
             F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w")

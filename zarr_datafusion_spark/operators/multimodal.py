@@ -18,13 +18,14 @@ carry (uri, offset, length) instead of inline bytes — same plumbing.
 
 from __future__ import annotations
 
-import os
 import struct
 from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from zarr_datafusion_spark.session import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -52,7 +53,7 @@ def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesizing payloads, so this Python stage exists only for the
     self-contained fixture.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     kind_idx = (F.col("doc_id") % 3).cast("int")
     width = (128 + (F.col("doc_id") % 8) * 64).cast("int")
     height = (128 + (F.col("doc_id") % 5) * 64).cast("int")

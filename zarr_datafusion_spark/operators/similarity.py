@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from zarr_datafusion_spark.session import load_table
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
 
@@ -64,7 +66,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zarr_datafusion_spark.operators.common import cpu_rebalance
 
     return cpu_rebalance(
-        spark, spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+        spark, load_table(spark, sf_dir, "embeddings")
     )
 
 

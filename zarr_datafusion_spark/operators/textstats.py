@@ -20,12 +20,13 @@ counts, so no rounding is needed.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from zarr_datafusion_spark.session import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -48,7 +49,7 @@ def _q(name: str, oracle: str | None = None):
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return load_table(spark, sf_dir, "documents")
 
 
 def _docs_cpu(spark: SparkSession, sf_dir: str) -> DataFrame:

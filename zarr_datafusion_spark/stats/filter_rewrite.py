@@ -34,7 +34,9 @@ joined with itself) narrows only while both scans push the same filters
 from __future__ import annotations
 
 import re
+import threading
 import uuid
+from contextlib import contextmanager
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,24 +59,51 @@ def try_filter_rewrite(
     # a subset statement with a WHERE over a table with chunk statistics
     # binds even when nothing narrows: its relation reads only its columns
     table = stmt and tables.get(fold(stmt.table))
-    refs = _references(spark, query, tables, fold, bool(table and table.sidecar))
-    if not refs:
-        return None
-    views, text = [], query
+    with _quiet_errors():
+        refs = _references(spark, query, tables, fold, bool(table and table.sidecar))
+        if not refs:
+            return None
+        views, text = [], query
+        try:
+            for start, stop, aliased, table in sorted(refs, reverse=True):
+                views.append(f"__zds_ref_{uuid.uuid4().hex}")
+                _relation(spark, table, stmt, schema).createOrReplaceTempView(views[-1])
+                alias = "" if aliased else f" AS {query[start : stop + 1]}"
+                text = f"{text[:start]}{views[-1]}{alias}{text[stop + 1 :]}"
+            out = spark.sql(text)
+            out._zds_shortcut_kind = "pruned"
+            return out
+        except Exception:  # the caller runs the user's own text
+            return None
+        finally:
+            for view in views:
+                spark.catalog.dropTempView(view)
+
+
+@contextmanager
+def _quiet_errors():
+    """Drop PySpark's query-context error records on this thread: an
+    attempt that fails here is re-run as the user wrote it, which logs
+    and raises its own error, so the attempt's (naming the internal
+    ``__zds_ref_`` views) would only be noise."""
+    from pyspark.logger import PySparkLogger
+
+    thread = threading.get_ident()
+
+    def other_thread(record) -> bool:
+        return record.thread != thread
+
+    loggers = [
+        PySparkLogger.getLogger(n)
+        for n in ("SQLQueryContextLogger", "DataFrameQueryContextLogger")
+    ]
+    for logger in loggers:
+        logger.addFilter(other_thread)
     try:
-        for start, stop, aliased, table in sorted(refs, reverse=True):
-            views.append(f"__zds_ref_{uuid.uuid4().hex}")
-            _relation(spark, table, stmt, schema).createOrReplaceTempView(views[-1])
-            alias = "" if aliased else f" AS {query[start : stop + 1]}"
-            text = f"{text[:start]}{views[-1]}{alias}{text[stop + 1 :]}"
-        out = spark.sql(text)
-        out._zds_shortcut_kind = "pruned"
-        return out
-    except Exception:  # the caller runs the user's own text
-        return None
+        yield
     finally:
-        for view in views:
-            spark.catalog.dropTempView(view)
+        for logger in loggers:
+            logger.removeFilter(other_thread)
 
 
 def _references(spark, query: str, tables: dict, fold, bind=False) -> list:
